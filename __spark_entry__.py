@@ -2057,10 +2057,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "match_sweep": _q_match_sweep,
         # ---- slot 51+: r15 driver-green (CORRECTNESS_r15 rows, 50/50),
         #      values unchanged this round — they rotate back into the
-        #      window next round.  The r16 BUILD-round registration the
-        #      staged queue was sized for did not happen (r16 ran as
-        #      the final optimization round); pending_queries() stays
-        #      registration-ready for any future build round. ---------
+        #      window next round. ----------------------------------------
         "shuffle_sequences": _pq_shuffle_sequences,
         "stratified_sample": _pq_stratified_sample,
         "dsir_sample": _pq_dsir_sample,
@@ -2114,13 +2111,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # ======================================================================
-# r14 REGISTERED GATES (moved from the staged queue this round) followed
-# by the r15 REGISTRATION QUEUE — staged gates NOT yet in
-# queries()/oracle_sql().  The rotation protocol requires brand-new keys
-# to enter inside the first-50 window; staged runners and oracles are
-# complete and pre-verifiable NOW via
-#   python tools/verify_local.py /root/testdata/sf0.01 --pending
-# so each round's registration is a dict move, not a build.
+# Gates registered in r14 and r15.  A new gate is a runner here plus its
+# oracle in oracle_sql(), verified with
+#   python tools/verify_local.py <sf_dir> <key>
 # ======================================================================
 
 
@@ -2235,7 +2228,7 @@ def _q_ann_ivfpq_query(spark, sf_dir):
         cb = _IVF_CODEBOOKS[key] = train_ivf_codebook(emb)
     # train_pq=False: the ann_ivfpq gate (and ann_ivfpq_oracle) use the
     # stride-SEED sub-codebooks; the Lloyd-trained PQ default would fork
-    # the ADC ordering from the SQL oracle (found by --pending verify)
+    # the ADC ordering from the SQL oracle (found by verify_local)
     write_ivfpq_index(emb.filter(even), path, train_emb=emb,
                       train_pq=False, codebook=cb)
     append_ivfpq_index(spark, path, emb.filter(~even))
@@ -2516,265 +2509,6 @@ def _pq_dsir_sample_oracle() -> str:
         f"WHERE {sample_u_sql('doc_id', DSIR_TARGET_SALT)} "
         f"< {_threshold(DSIR_TARGET_FRACTION)}")
     return dsir_sample_oracle_sql(target_sql)
-
-
-# ---- r16 capacity merges (staged a round early — the r16 window is
-# the 50 r14-window keys expiring with ZERO free slots, so the repair
-# family's shared level3 schema is the only room; these three 2→1
-# unions retire 6 members and free 3 slots for whatever r16 ships) ----
-
-
-def _pq_drop_boilerplate(spark, sf_dir):
-    """CCNet-style cross-document boilerplate line removal (NEW r14,
-    r16 candidate — fills one of the three slots the repair unions
-    free).  The fabric ships whitespace-flattened, so the gate pins
-    the word-window segmentation (line_words=12): the planted
-    duplicate documents share every aligned window, giving the census
-    real rows; the newline mode is pinned by
-    tests/test_boilerplate.py's fixture differential."""
-    from obadiah_spark.pipelines.docquality import drop_boilerplate
-
-    return drop_boilerplate(_docs(spark, sf_dir).select("doc_id", "text"),
-                            line_words=12)
-
-
-def _pq_dup_spans_union(spark, sf_dir):
-    """r16 capacity merge (2→1): dup_spans' historical remove-every-
-    covered-position mode and the NEW r15 ExactSubstr span-granularity
-    mode (min_span=16 — only maximal merged spans ≥ 16 tokens removed,
-    Lee et al. 2022 §3's long-verbatim-duplication rule, under which
-    short incidental repeats survive: 45/500 fabric docs keep a
-    removal at this geometry and 300+ differ from base mode, so the
-    leg pins the islands chain, not a rerun) as one variant-tagged
-    gate over the identical output schema.  Retiring the dup_spans
-    tail key frees the slot that lets ann_ingest_stream register in
-    r16 instead of waiting a round; each leg keeps its exact oracle
-    geometry."""
-    from obadiah_spark.pipelines.docquality import _words, dup_spans
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    # ONE tokenization pass shared by both legs (dup_spans' tok=
-    # contract, the gopher_quality sharing precedent) — the union must
-    # not double the gate's most expensive stage
-    tok = _words(d).localCheckpoint()
-    return _variant_union(
-        ("all", dup_spans(d, tok=tok)),
-        ("minspan", dup_spans(d, tok=tok, min_span=16)),
-    )
-
-
-def _pq_ann_ingest_stream(spark, sf_dir):
-    """Streaming IVF-PQ index maintenance (NEW r15, r16 candidate):
-    the embeddings table replayed as a 3-micro-batch vector stream
-    through ``run_ann_index_ingest`` — each batch PQ-encodes under
-    frozen session codebooks and lands in idempotent
-    ingest_batch/cell partitions — then the standard index query over
-    the streamed layout.  Because every batch runs the exact
-    _encode_vectors pass the batch build runs, the streamed index is
-    row-identical to a single-shot build (pytest-pinned), so the
-    oracle is ann_ivfpq_oracle() VERBATIM: the hash covers the
-    streaming driver, the idempotent partition layout, and the
-    pruned query over it."""
-    import os
-
-    from obadiah_spark.pipelines.similarity import (ann_ivfpq_query,
-                                                    pq_subcodebooks,
-                                                    train_ivf_codebook)
-    from obadiah_spark.streaming.ann_ingest import run_ann_index_ingest
-
-    _load(spark, sf_dir)
-    emb = spark.table("embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _IVF_CODEBOOKS.get(key)
-    if cb is None:
-        cb = _IVF_CODEBOOKS[key] = train_ivf_codebook(emb)
-    work = _gate_tmpdir("ann_ingest_gate_")
-    src, _n = _write_replay_chunks(emb.select("vec_id", "embedding"),
-                                   ["vec_id"], work, subdir="vecs")
-    idx = os.path.join(work, "index")
-    # seeded sub-codebooks: the ann_ivfpq oracle's geometry (the
-    # Lloyd-trained default would fork the ADC ordering from the SQL)
-    run_ann_index_ingest(
-        spark, src, "vec_id long, embedding array<float>",
-        os.path.join(work, "ckpt"), idx,
-        codebook=cb, subcodebook=pq_subcodebooks(emb))
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return ann_ivfpq_query(spark, idx, q)
-
-
-def _pq_ppl_buckets(spark, sf_dir):
-    """CCNet §4.2 per-language perplexity bucketing (NEW r15, r16
-    candidate — takes one of the two free slots the recomputed window
-    math leaves): head/middle/tail thirds by the integer milli-bit
-    bigram-surprisal CDF within each lang_id_ngram language.  The
-    boundaries are value-based over the (lang, score) CENSUS — no
-    per-document window, so a dominant language costs a combinable agg
-    plus a broadcast join, not a single-task sort (the 100 TB English
-    problem)."""
-    from obadiah_spark.pipelines.text import perplexity_buckets
-
-    return perplexity_buckets(_docs(spark, sf_dir))
-
-
-def _pq_cluster_sample(spark, sf_dir):
-    """Cluster-balanced subsampling (NEW r14, r16 candidate): keep the
-    per_cell=20 lowest-hash vectors of every IVF cell — topic
-    balancing composed from the verified IVF assignment and the shared
-    60-bit hash.  Reuses the session's trained coarse codebook like
-    ann_ivfpq/semdedup."""
-    from obadiah_spark.pipelines.sampling import cluster_balanced_sample
-    from obadiah_spark.pipelines.similarity import train_ivf_codebook
-
-    _load(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _IVF_CODEBOOKS.get(key)
-    if cb is None:
-        cb = _IVF_CODEBOOKS[key] = train_ivf_codebook(
-            spark.table("embeddings"))
-    return cluster_balanced_sample(spark.table("embeddings"), 20,
-                                   codebook=cb)
-
-
-def _pq_cleanse_union(spark, sf_dir):
-    """r16 capacity merge (2→1): the two Q5 staging-repair passes that
-    rewrite event order — pga_cleanse's event-order normalization and
-    the aggressor-creation-order fix — as one variant-tagged gate over
-    the shared level3 output schema; each branch keeps its exact
-    oracle."""
-    return _variant_union(
-        ("cleanse", _q_cleanse_order(spark, sf_dir)),
-        ("aggressor", _q_fix_aggressor(spark, sf_dir)),
-    )
-
-
-def _pq_reveal_era_union(spark, sf_dir):
-    """r16 capacity merge (2→1): reveal_episodes' episode recovery and
-    insert_level3_era's era split — both full-log level3 rewrites —
-    as one variant-tagged gate; each branch keeps its exact oracle."""
-    return _variant_union(
-        ("reveal", _q_reveal_episodes(spark, sf_dir)),
-        ("era", _q_insert_era(spark, sf_dir)),
-    )
-
-
-def _pq_merge_repairs_union(spark, sf_dir):
-    """r16 capacity merge (2→1): the two merge-class repairs —
-    merge_crossed_books and merge_episodes — as one variant-tagged
-    gate; each branch keeps its exact oracle."""
-    return _variant_union(
-        ("crossed", _q_merge_crossed_books(spark, sf_dir)),
-        ("episodes", _q_merge_episodes(spark, sf_dir)),
-    )
-
-
-def pending_queries() -> dict:
-    """The staged r16 gates — same contract as queries(), invisible to
-    the driver until moved there inside r16's first-50 window.  All
-    were staged and pre-verified in r14 (`verify_local --pending`); the
-    r15 registration (this round) moved its own seven keys out of this
-    queue, leaving exactly the r16 window plan.
-
-    r16 window math — PRE-SOLVED (recomputed per VERDICT r14 #1): the
-    r16 window is the 50 r14-window keys, of which
-    embedding_dedup_lsh_recall already retired at r15 registration
-    (absorbed by the lsh_recall union) → 49 expiring; the three staged
-    repair-family unions below (cleanse_order ∪ fix_aggressor_order,
-    reveal_episodes ∪ insert_era, merge_crossed_books ∪
-    merge_episodes — all share the level3 output schema) retire 6
-    members → 43 remaining + 3 unions = 46; the dup_spans union (base
-    mode ∪ the NEW ExactSubstr min_span mode — identical schema)
-    retires a 7th tail member → 42 remaining + 4 unions = 46, and the
-    four staged standalones (drop_boilerplate, cluster_sample,
-    ppl_buckets, ann_ingest_stream) fill it to exactly 50.  The whole
-    computation is executable: staged_registration_plan() +
-    tests/test_entry_contract.py::
-    test_staged_registration_plan_fits_the_window.  Slack if r16 needs
-    a slot after all: csv_roundtrip shares the repair family's level3
-    schema."""
-    return {
-        # r16 queue (4 capacity merges + 4 staged standalones;
-        # window exactly full — the plan helper pins it)
-        "cleanse_order": _pq_cleanse_union,
-        "reveal_episodes": _pq_reveal_era_union,
-        "merge_crossed_books": _pq_merge_repairs_union,
-        "dup_spans": _pq_dup_spans_union,
-        "drop_boilerplate": _pq_drop_boilerplate,
-        "cluster_sample": _pq_cluster_sample,
-        "ppl_buckets": _pq_ppl_buckets,
-        "ann_ingest_stream": _pq_ann_ingest_stream,
-    }
-
-
-# r16 capacity merges: union key -> the member keys it retires (the
-# union reuses the FIRST member's key; the rest delete from queries()).
-_R16_UNION_RETIRES = {
-    "cleanse_order": ("cleanse_order", "fix_aggressor_order"),
-    "reveal_episodes": ("reveal_episodes", "insert_era"),
-    "merge_crossed_books": ("merge_crossed_books", "merge_episodes"),
-    # base mode ∪ the NEW ExactSubstr min_span mode, identical schema
-    "dup_spans": ("dup_spans",),
-}
-_R16_NEW_STANDALONES = ("drop_boilerplate", "cluster_sample",
-                        "ppl_buckets", "ann_ingest_stream")
-
-
-def staged_registration_plan() -> list[str]:
-    """The planned first-50 window for the NEXT build round, MECHANIZED —
-    VERDICT r14 #1 was a hand-arithmetic slip in exactly this
-    computation, so the plan is executable and pytest-checked instead of
-    prose: the expiring keys are the CURRENT tail; the staged unions
-    retire their members; the staged standalones take freed slots.
-
-    HISTORY: the plan was sized to fit r16's window exactly (the r15
-    tail contained all 7 union-retired members → 42 surviving + 4
-    unions + 4 standalones = 50).  r16 ran as the FINAL optimization
-    round — registration is feature work, out of its scope — so the r16
-    window is pure rotation (the 49 r14-verified keys + match_sweep)
-    and this plan now describes a hypothetical future build round whose
-    expiring set is the r15-window keys, none of which the staged
-    unions retire: the plan exceeds one 50-slot window and such a round
-    would stage part of it.  tests/test_entry_contract.py keeps the
-    structural invariants (resolvable, duplicate-free, every pending
-    key planned, every tail key planned-or-retired, retired members
-    real)."""
-    current = list(queries())
-    tail = current[50:]
-    retired = {m for ms in _R16_UNION_RETIRES.values() for m in ms}
-    surviving = [k for k in tail if k not in retired]
-    return (list(_R16_NEW_STANDALONES) + list(_R16_UNION_RETIRES)
-            + surviving)
-
-
-def pending_oracle_sql() -> dict[str, str]:
-    """DuckDB oracles for pending_queries(), keyed identically."""
-    from obadiah_spark.pipelines import docquality
-    from obadiah_spark.pipelines import sampling as sampling_mod
-    from obadiah_spark.pipelines import text as text_mod
-    from obadiah_spark.pipelines.similarity import ann_ivfpq_oracle
-
-    full = oracle_sql()
-    return {
-        # r16 queue: the level3-repair schema family in pairs
-        "cleanse_order": _variant_union_oracle(
-            cleanse=full["cleanse_order"],
-            aggressor=full["fix_aggressor_order"]),
-        "reveal_episodes": _variant_union_oracle(
-            reveal=full["reveal_episodes"], era=full["insert_era"]),
-        "merge_crossed_books": _variant_union_oracle(
-            crossed=full["merge_crossed_books"],
-            episodes=full["merge_episodes"]),
-        "drop_boilerplate": docquality.drop_boilerplate_oracle_sql(
-            line_words=12),
-        "cluster_sample": sampling_mod.cluster_balanced_sample_oracle_sql(20),
-        "ppl_buckets": text_mod.perplexity_buckets_oracle_sql(),
-        "dup_spans": _variant_union_oracle(
-            all=docquality.dup_spans_oracle_sql(),
-            minspan=docquality.dup_spans_oracle_sql(min_span=16)),
-        # streamed index ≡ single-shot build (shared _encode_vectors
-        # pass; pytest-pinned), so the query oracle is verbatim
-        "ann_ingest_stream": ann_ivfpq_oracle(),
-    }
 
 
 def oracle_sql() -> dict[str, str]:

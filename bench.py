@@ -219,7 +219,7 @@ def main() -> None:
     # live session while the default path did not. Every timed query is
     # already done here; only JSON emission follows.
     spark.stop()
-    variance: dict[str, dict[str, float]] = {}
+    variance: dict[str, dict] = {}
     if not args.no_variance and only is None:
         import subprocess
         slowest = sorted(first_pass, key=lambda k: -timings[k])[:5]
@@ -245,15 +245,17 @@ def main() -> None:
             if os.path.exists(probe):
                 os.unlink(probe)
             if iso is not None:
-                # clock-health stamp taken right after the probe: an
-                # isolated reading from a degraded window arrives with
-                # its own refutation (spin >> quiet baseline)
+                # clock-health stamp taken right after the probe: a
+                # spin over 1.5x the run-start spin marks the reading as
+                # taken in a degraded clock window
                 spin = _spin_probe()
+                valid = spin <= 1.5 * spin_start
                 variance[name] = {"in_bench": timings[name],
-                                  "isolated": iso, "spin": spin}
+                                  "isolated": iso, "spin": spin,
+                                  "valid": valid}
                 print(f"# variance {name}: in_bench={timings[name]:.3f}s "
-                      f"isolated={iso:.3f}s spin={spin:.3f}s",
-                      file=sys.stderr)
+                      f"isolated={iso:.3f}s spin={spin:.3f}s "
+                      f"valid={valid}", file=sys.stderr)
 
     # OUTPUT PROTOCOL (fixed in round 9 — VERDICT r8 task #1): the driver
     # keeps only the TAIL of stdout, and the full 86-entry per-query dict

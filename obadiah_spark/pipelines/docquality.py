@@ -486,9 +486,7 @@ DUP_SPAN_MIN_COUNT = 2
 
 
 def dup_spans(docs: DataFrame, n: int = DUP_SPAN_N,
-              min_count: int = DUP_SPAN_MIN_COUNT,
-              tok: DataFrame | None = None,
-              min_span: int | None = None) -> DataFrame:
+              min_count: int = DUP_SPAN_MIN_COUNT) -> DataFrame:
     """Per-document corpus-wide duplicate-span accounting + rewrite.
 
     Returns one row per doc_id (documents with at least one token):
@@ -497,28 +495,8 @@ def dup_spans(docs: DataFrame, n: int = DUP_SPAN_N,
     removed (kept tokens joined by single spaces — the shippable
     ExactSubstr-style rewrite, hashed so the driver gate covers the
     byte-exact removal, not just the counts).  Overlapping duplicated
-    windows count each position once.  ``tok`` — a pre-materialized
-    ``_words`` frame, same contract as :func:`gopher_quality`.
-
-    ``min_span`` (NEW r15, default ``None`` = remove every covered
-    position, the historical behavior with a byte-identical plan):
-    the span-granularity ExactSubstr rule of Lee et al. 2022 §3 —
-    duplicated-gram intervals are merged into MAXIMAL contiguous
-    covered spans per document (interval union: a run of duplicated
-    n-gram starts whose coverage never breaks), and only spans of at
-    least ``min_span`` tokens are removed, so short incidental repeats
-    (a common phrase, a shared date line) survive and only long
-    verbatim duplications — the memorization hazard the paper targets
-    — are cut.  Deviation from the paper kept from the base mode:
-    every copy of a qualifying span is removed, not all-but-one (the
-    canonical-copy choice needs an ordering oracle the corpus doesn't
-    carry; rewrite consumers dedup documents separately).  The merge
-    is one doc-keyed running-max window over duplicated START
-    positions only (a small fraction of the corpus), and the spans
-    explode to exactly the removed positions — disjoint by
-    construction, so no DISTINCT shuffle."""
-    if tok is None:
-        tok = _words(docs)
+    windows count each position once."""
+    tok = _words(docs)
     w_doc = W.partitionBy("doc_id").orderBy("pos")
     g = tok.withColumn("g", F.concat_ws(
         " ", "w", *[F.lead("w", i).over(w_doc) for i in range(1, n)]))
@@ -540,38 +518,14 @@ def dup_spans(docs: DataFrame, n: int = DUP_SPAN_N,
     dup_g = (g.groupBy("gh", "gh2").agg(F.count(F.lit(1)).alias("cnt"))
              .filter(F.col("cnt") >= min_count).select("gh", "gh2"))
     starts = g.join(dup_g, ["gh", "gh2"]).select("doc_id", "pos")
-    if min_span is None:
-        covered = (
-            starts
-            .select("doc_id",
-                    F.explode(F.sequence(F.col("pos"),
-                                         F.col("pos") + n - 1))
-                     .alias("pos"))
-            .distinct()
-            .withColumn("dup", F.lit(True))
-        )
-    else:
-        # interval union over duplicated-gram starts: a start opens a
-        # new maximal span iff it begins past the running coverage end
-        # (+1 keeps token-adjacent intervals as ONE contiguous region)
-        w_s = W.partitionBy("doc_id").orderBy("pos")
-        prev_end = F.max(F.col("pos") + n - 1).over(
-            w_s.rowsBetween(W.unboundedPreceding, -1))
-        flagged = starts.withColumn(
-            "new_span",
-            F.when(prev_end.isNull()
-                   | (F.col("pos") > prev_end + 1), 1).otherwise(0))
-        isl = flagged.withColumn(
-            "span_id", F.sum("new_span").over(
-                w_s.rowsBetween(W.unboundedPreceding, 0)))
-        spans = (isl.groupBy("doc_id", "span_id")
-                 .agg(F.min("pos").alias("s"),
-                      F.max(F.col("pos") + n - 1).alias("e"))
-                 .filter(F.col("e") - F.col("s") + 1 >= min_span))
-        covered = (spans
-                   .select("doc_id",
-                           F.explode(F.sequence("s", "e")).alias("pos"))
-                   .withColumn("dup", F.lit(True)))
+    covered = (
+        starts
+        .select("doc_id",
+                F.explode(F.sequence(F.col("pos"), F.col("pos") + n - 1))
+                 .alias("pos"))
+        .distinct()
+        .withColumn("dup", F.lit(True))
+    )
     marked = (tok.join(covered, ["doc_id", "pos"], "left")
               .withColumn("dup", F.coalesce("dup", F.lit(False))))
     kept = F.when(~F.col("dup"), F.struct("pos", "w"))
@@ -593,49 +547,18 @@ def dup_spans(docs: DataFrame, n: int = DUP_SPAN_N,
 
 
 def dup_spans_oracle_sql(n: int = DUP_SPAN_N,
-                         min_count: int = DUP_SPAN_MIN_COUNT,
-                         min_span: int | None = None) -> str:
+                         min_count: int = DUP_SPAN_MIN_COUNT) -> str:
     """DuckDB replica — same tokenization, same coverage rule, same
     rewrite (string_agg skips the removed tokens exactly like the
     collect_list of kept structs; an all-duplicated doc coalesces to the
-    empty string on both engines).  ``min_span`` mirrors the operator's
-    span-granularity mode: default ``None`` emits the historical SQL
-    byte-identically; an int swaps the covered CTE for the interval-
-    union islands chain (two window layers split across CTEs — DuckDB
-    cannot nest window calls)."""
+    empty string on both engines)."""
     leads = " || ' ' || ".join(
         f"lead(w, {i}) OVER dw" for i in range(1, n))
     ofs_list = ", ".join(str(i) for i in range(n))
-    if min_span is None:
-        covered = f"""covered AS (
+    covered = f"""covered AS (
     SELECT DISTINCT s.doc_id, s.pos + t.ofs AS pos
     FROM (SELECT g2.doc_id, g2.pos FROM g2 JOIN dupg USING (g)) s,
          unnest([{ofs_list}]) AS t(ofs)
-)"""
-    else:
-        covered = f"""starts AS (
-    SELECT g2.doc_id, g2.pos FROM g2 JOIN dupg USING (g)
-), flagged AS (
-    SELECT doc_id, pos,
-           CASE WHEN max(pos + {n - 1}) OVER pw IS NULL
-                  OR pos > max(pos + {n - 1}) OVER pw + 1
-                THEN 1 ELSE 0 END AS new_span
-    FROM starts
-    WINDOW pw AS (PARTITION BY doc_id ORDER BY pos
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-), isl AS (
-    SELECT doc_id, pos,
-           sum(new_span) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS span_id
-    FROM flagged
-), spans AS (
-    SELECT doc_id, min(pos) AS s, max(pos) + {n - 1} AS e
-    FROM isl GROUP BY doc_id, span_id
-    HAVING max(pos) + {n - 1} - min(pos) + 1 >= {min_span}
-), covered AS (
-    SELECT sp.doc_id, u.pos
-    FROM spans sp, unnest(range(sp.s, sp.e + 1)) AS u(pos)
 )"""
     return f"""
 WITH tok AS (
@@ -673,15 +596,12 @@ FROM m GROUP BY doc_id
 
 
 BOILERPLATE_MIN_DF = 2
-BOILERPLATE_LINE_WORDS = 12
 
 
 def _boilerplate_marked(docs: DataFrame, min_df: int,
-                        line_words: int | None,
-                        tok: DataFrame | None) -> DataFrame:
+                        line_words: int | None) -> DataFrame:
     """(doc_id, line_no, line, bp) — every non-empty line with its
-    boilerplate verdict; the shared core of :func:`drop_boilerplate`
-    and :func:`boilerplate_rewrite`."""
+    boilerplate verdict, the core of :func:`boilerplate_rewrite`."""
     if line_words is None:
         lines = (docs.select(
             "doc_id",
@@ -690,9 +610,7 @@ def _boilerplate_marked(docs: DataFrame, min_df: int,
             .withColumn("line", F.trim("line"))
             .filter(F.length("line") > 0))
     else:
-        if tok is None:
-            tok = _words(docs.select("doc_id", "text"))
-        lines = (tok.withColumn(
+        lines = (_words(docs.select("doc_id", "text")).withColumn(
             "line_no", (F.col("pos") / F.lit(line_words))
             .cast("long"))
             .groupBy("doc_id", "line_no")
@@ -714,13 +632,25 @@ def _boilerplate_marked(docs: DataFrame, min_df: int,
 
 
 def boilerplate_rewrite(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF,
-                        line_words: int | None = None,
-                        tok: DataFrame | None = None) -> DataFrame:
-    """(doc_id, text) — each document rebuilt from its kept lines (the
-    composition form :func:`corpus_prepare` consumes; an
+                        line_words: int | None = None) -> DataFrame:
+    """CCNet-style cross-document boilerplate removal (Wenzek et al.
+    2020 §4.1): a LINE occurring in at least ``min_df`` DISTINCT
+    documents is boilerplate (nav menus, cookie banners, footers).
+
+    Returns (doc_id, text) — each document rebuilt from its kept lines
+    (the composition form :func:`corpus_prepare` consumes; an
     all-boilerplate or empty document carries the empty string, which
-    the downstream quality stage then drops on its word bounds)."""
-    marked = _boilerplate_marked(docs, min_df, line_words, tok)
+    the downstream quality stage then drops on its word bounds).
+    ``line_words=None`` splits on newlines and ignores blank lines; an
+    int segments each document into fixed ``line_words`` word windows
+    instead, for whitespace-flattened corpora like the synthetic
+    documents table.
+
+    Scale shape: the line census and the membership join run on a
+    128-bit line hash (two xxhash64 seeds), census = one hash-keyed
+    groupBy with a distinct-doc count, rebuild = one doc-keyed
+    aggregation.  Nothing is all-pairs."""
+    marked = _boilerplate_marked(docs, min_df, line_words)
     kept = F.when(~F.col("bp"), F.struct("line_no", "line"))
     agg = marked.groupBy("doc_id").agg(
         F.array_join(
@@ -731,55 +661,13 @@ def boilerplate_rewrite(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF,
                     F.coalesce("text", F.lit("")).alias("text")))
 
 
-def drop_boilerplate(docs: DataFrame, min_df: int = BOILERPLATE_MIN_DF,
-                     line_words: int | None = None,
-                     tok: DataFrame | None = None) -> DataFrame:
-    """CCNet-style cross-document boilerplate removal (Wenzek et al.
-    2020 §4.1 — the paragraph-dedup pass every web pipeline runs before
-    quality filtering; RefinedWeb/Dolma inherit it): a LINE occurring
-    in at least ``min_df`` DISTINCT documents is boilerplate (nav
-    menus, cookie banners, footers), and every document is rebuilt
-    from its kept lines.
-
-    ``line_words=None`` splits on newlines — the shape web corpora
-    ship in; an int segments each document into fixed ``line_words``
-    word windows instead (for corpora stored whitespace-flattened,
-    like the driver fabric — the planted duplicate documents then
-    share every aligned window).  Output: one row per document —
-    ``(doc_id, n_lines, dropped_lines, clean_md5, clean_len)`` with
-    ``clean_md5``/``clean_len`` over the newline-rejoined kept lines
-    (the dup_spans normalized-rewrite precedent; an all-boilerplate
-    document coalesces to the empty string on both engines).
-
-    Scale shape (the dup_spans discipline): the line census and the
-    membership join run on a 128-bit line hash (two xxhash64 seeds —
-    16 B per line crossing the shuffle instead of whole paragraphs),
-    census = one hash-keyed groupBy with a distinct-doc count, rebuild
-    = one doc-keyed aggregation.  Nothing is all-pairs."""
-    marked = _boilerplate_marked(docs, min_df, line_words, tok)
-    kept = F.when(~F.col("bp"), F.struct("line_no", "line"))
-    agg = marked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.when(F.col("bp"), 1).otherwise(0)).alias("dropped_lines"),
-        F.array_join(
-            F.transform(F.array_sort(F.collect_list(kept)),
-                        lambda s: s["line"]), "\n").alias("clean"))
-    return (docs.select("doc_id").join(agg, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
-                    F.coalesce("dropped_lines", F.lit(0))
-                    .alias("dropped_lines"),
-                    F.md5(F.coalesce("clean", F.lit("")))
-                    .alias("clean_md5"),
-                    F.length(F.coalesce("clean", F.lit("")))
-                    .alias("clean_len")))
-
-
 def _boilerplate_rewrite_sql(src: str, min_df: int,
                              line_words: int | None) -> str:
     """DuckDB replica of :func:`boilerplate_rewrite` over ``src`` —
-    yields (doc_id, text) with the kept-lines rejoined text; shared by
-    the standalone oracle and corpus_prepare's optional stage."""
+    yields (doc_id, text) with the kept-lines rejoined text, for
+    corpus_prepare's optional stage (census on the raw line text:
+    DuckDB has no xxhash64, and the hash is value-invariant absent
+    collisions)."""
     if line_words is None:
         seg = f"""
         SELECT doc_id, line_no, line FROM (
@@ -820,62 +708,6 @@ def _boilerplate_rewrite_sql(src: str, min_df: int,
             ) c ON l.line = c.line
         ) m GROUP BY doc_id
     ) a ON d.doc_id = a.doc_id"""
-
-
-def drop_boilerplate_oracle_sql(min_df: int = BOILERPLATE_MIN_DF,
-                                line_words: int | None = None,
-                                table: str = "documents") -> str:
-    """DuckDB replica — same segmentation, census rule, and rewrite
-    (census on the raw line text: DuckDB has no xxhash64, and hashing
-    is a Spark-side shuffle-width optimization, value-invariant absent
-    collisions — the dup_spans precedent)."""
-    if line_words is None:
-        seg = f"""
-    SELECT doc_id, line_no, line FROM (
-        SELECT doc_id,
-               trim(unnest(string_split(text, chr(10)))) AS line,
-               generate_subscripts(string_split(text, chr(10)), 1) - 1
-                 AS line_no
-        FROM {table}
-    ) raw WHERE length(line) > 0"""
-    else:
-        seg = f"""
-    SELECT doc_id, CAST(pos // {line_words} AS BIGINT) AS line_no,
-           string_agg(w, ' ' ORDER BY pos) AS line
-    FROM (
-        SELECT doc_id, u.w, u.pos FROM (
-            SELECT doc_id,
-                   unnest(string_split_regex(text, '{WS_CLASS}')) AS w,
-                   generate_subscripts(
-                       string_split_regex(text, '{WS_CLASS}'), 1) - 1
-                     AS pos
-            FROM {table}
-        ) u WHERE length(u.w) > 0
-    ) tok GROUP BY doc_id, pos // {line_words}"""
-    return f"""
-WITH lines AS ({seg}
-), census AS (
-    SELECT line FROM lines GROUP BY line
-    HAVING count(DISTINCT doc_id) >= {min_df}
-), marked AS (
-    SELECT l.doc_id, l.line_no, l.line,
-           c.line IS NOT NULL AS bp
-    FROM lines l LEFT JOIN census c ON l.line = c.line
-), agg AS (
-    SELECT doc_id,
-           count(*) AS n_lines,
-           sum(CASE WHEN bp THEN 1 ELSE 0 END) AS dropped_lines,
-           COALESCE(string_agg(line, chr(10) ORDER BY line_no)
-                    FILTER (WHERE NOT bp), '') AS clean
-    FROM marked GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(a.n_lines, 0) AS BIGINT) AS n_lines,
-       CAST(COALESCE(a.dropped_lines, 0) AS BIGINT) AS dropped_lines,
-       md5(COALESCE(a.clean, '')) AS clean_md5,
-       CAST(length(COALESCE(a.clean, '')) AS INT) AS clean_len
-FROM {table} d LEFT JOIN agg a ON d.doc_id = a.doc_id
-"""
 
 
 def corpus_prepare(docs: DataFrame, bench: DataFrame | None = None,

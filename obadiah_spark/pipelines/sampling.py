@@ -123,101 +123,3 @@ SELECT * EXCLUDE (_thr) FROM (
     FROM {table}
 ) s WHERE _thr IS NOT NULL AND sample_u < _thr
 """
-
-
-# ---- cluster-balanced subsampling -------------------------------------
-# Topic/diversity balancing (the DCLM/Nemotron-CC practice): cap every
-# semantic cluster's contribution so a few giant topics cannot dominate
-# the training mix.  Reuses the engine's verified IVF machinery for the
-# clusters and the shared 60-bit hash for the deterministic per-cell
-# quota — a composition, not new math.
-
-
-def cluster_balanced_sample(emb: DataFrame, per_cell: int,
-                            codebook: DataFrame | None = None,
-                            n_cells: int | None = None,
-                            stride: int | None = None,
-                            iters: int | None = None,
-                            train_stride: int | None = None,
-                            train_max: int | None = None,
-                            salt: str = "cluster_sample") -> DataFrame:
-    """Keep the ``per_cell`` lowest-hash vectors of every IVF cell:
-    ``(vec_id, cell, sample_u, rk)`` for the kept rows.
-
-    Deterministic (hash order, vec_id tiebreak), nested (the
-    per_cell=10 sample is a prefix of the per_cell=20 sample — the
-    same monotonicity hash_sample gives fractions), and balanced by
-    construction: no cell contributes more than ``per_cell`` rows.
-    IVF knobs default to the similarity module's; pass ``codebook``
-    (from train_ivf_codebook) to skip in-query training — the
-    production path, under which cells ∝ corpus keeps the output size
-    ∝ corpus at a flat per-topic cap.
-
-    Scale shape: one O(n × n_cells) broadcast scoring pass for the
-    assignment (never all-pairs) + ONE cell-partitioned window — with
-    corpus-proportional cells the per-cell population is flat, so no
-    window partition outgrows an executor."""
-    from pyspark.sql import Window as W
-
-    from obadiah_spark.pipelines.similarity import (
-        IVF_CELLS, IVF_ITERS, IVF_STRIDE, IVF_TRAIN_MAX, IVF_TRAIN_STRIDE,
-        _rank_cells, ivf_centroids)
-
-    n_cells = IVF_CELLS if n_cells is None else n_cells
-    stride = IVF_STRIDE if stride is None else stride
-    iters = IVF_ITERS if iters is None else iters
-    train_stride = IVF_TRAIN_STRIDE if train_stride is None else train_stride
-    train_max = IVF_TRAIN_MAX if train_max is None else train_max
-    cents = codebook if codebook is not None else ivf_centroids(
-        emb, n_cells, stride, iters, train_stride, train_max)
-    assign = (_rank_cells(emb.select("vec_id", "embedding"), cents,
-                          "vec_id", "embedding")
-              .filter(F.col("cr") == 1).select("vec_id", "cell"))
-    w = W.partitionBy("cell").orderBy("sample_u", "vec_id")
-    return (assign.withColumn("sample_u", sample_key("vec_id", salt))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= int(per_cell))
-            .select("vec_id", "cell", "sample_u", "rk"))
-
-
-def cluster_balanced_sample_oracle_sql(per_cell: int,
-                                       n_cells: int | None = None,
-                                       stride: int | None = None,
-                                       iters: int | None = None,
-                                       train_stride: int | None = None,
-                                       train_max: int | None = None,
-                                       salt: str = "cluster_sample") -> str:
-    """DuckDB replica including the k-means training (the shared
-    `_ivf_codebook_ctes` chain the ann_ivf/semdedup oracles use), the
-    argmax assignment, and the per-cell hash-order quota."""
-    from obadiah_spark.pipelines.similarity import (
-        IVF_CELLS, IVF_ITERS, IVF_STRIDE, IVF_TRAIN_MAX, IVF_TRAIN_STRIDE,
-        _ivf_codebook_ctes)
-
-    n_cells = IVF_CELLS if n_cells is None else n_cells
-    stride = IVF_STRIDE if stride is None else stride
-    iters = IVF_ITERS if iters is None else iters
-    train_stride = IVF_TRAIN_STRIDE if train_stride is None else train_stride
-    train_max = IVF_TRAIN_MAX if train_max is None else train_max
-    return f"""
-WITH e AS MATERIALIZED (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-), {_ivf_codebook_ctes(n_cells, stride, iters, train_stride, train_max)}, ar AS (
-    SELECT e.vec_id, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-               round(list_dot_product(e.emb, c.c_emb)
-                     / (sqrt(list_dot_product(e.emb, e.emb))
-                        * sqrt(list_dot_product(c.c_emb, c.c_emb))), 9) DESC,
-               c.cell) AS cr
-    FROM e CROSS JOIN c
-), u AS (
-    SELECT vec_id, cell, {sample_u_sql("vec_id", salt)} AS sample_u
-    FROM ar WHERE cr = 1
-)
-SELECT vec_id, cell, sample_u, CAST(rk AS INT) AS rk FROM (
-    SELECT vec_id, cell, sample_u,
-           row_number() OVER (PARTITION BY cell
-                              ORDER BY sample_u, vec_id) AS rk
-    FROM u
-) q WHERE rk <= {int(per_cell)}
-"""

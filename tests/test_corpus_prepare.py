@@ -141,6 +141,67 @@ def test_prepare_boilerplate_stage(spark, sf_dir, duck):
     assert (merged.redacted_md5_bp != merged.redacted_md5_raw).any()
 
 
+# newline-mode boilerplate (line_words=None): the fabric ships
+# whitespace-flattened text, so these real newline-structured docs with a
+# shared footer are the only cover of the line split
+_FOOTER = "subscribe to our newsletter | cookie policy | contact us"
+_BP_FIXTURE = [
+    (1, f"alpha article body one\nsecond unique line\n{_FOOTER}"),
+    (2, f"beta article body two\n{_FOOTER}\ntrailing unique thought"),
+    (3, f"{_FOOTER}"),                       # all-boilerplate doc
+    (4, "gamma standalone piece\nwith two unique lines"),
+    (5, ""),                                  # empty doc: zero lines
+    (6, f"delta body\n\n\n{_FOOTER}"),        # blank lines ignored
+]
+
+
+def _bp_rewrite(spark, **kw) -> dict[int, str]:
+    from obadiah_spark.pipelines.docquality import boilerplate_rewrite
+
+    sdf = spark.createDataFrame(_BP_FIXTURE, "doc_id bigint, text string")
+    return {r.doc_id: r.text for r in boilerplate_rewrite(sdf, **kw).collect()}
+
+
+def test_boilerplate_rewrite_newline_differential(spark, duck):
+    import pandas as pd
+
+    from obadiah_spark.pipelines.docquality import (
+        BOILERPLATE_MIN_DF, _boilerplate_rewrite_sql)
+
+    duck.register("bp_docs", pd.DataFrame(_BP_FIXTURE,
+                                          columns=["doc_id", "text"]))
+    want = dict(duck.execute(_boilerplate_rewrite_sql(
+        "bp_docs", BOILERPLATE_MIN_DF, None)).fetchall())
+    got = _bp_rewrite(spark)
+    assert got == want
+    # non-vacuous: the footer is cut from the docs that carry it
+    assert got[1] != _BP_FIXTURE[0][1] and got[3] == ""
+
+
+def test_boilerplate_rewrite_newline_semantics(spark):
+    out = _bp_rewrite(spark)
+    # the shared footer (4 docs) is dropped everywhere; unique lines kept
+    assert out[1] == "alpha article body one\nsecond unique line"
+    assert out[2] == "beta article body two\ntrailing unique thought"
+    # all-boilerplate doc coalesces to the empty rewrite
+    assert out[3] == ""
+    # untouched doc keeps its exact text
+    assert out[4] == "gamma standalone piece\nwith two unique lines"
+    # empty doc: still present, empty rewrite
+    assert out[5] == ""
+    # blank lines are not census candidates and vanish from the rewrite
+    assert out[6] == "delta body"
+
+
+def test_boilerplate_rewrite_min_df_threshold(spark):
+    """min_df above the footer's document frequency keeps every
+    non-blank line."""
+    out = _bp_rewrite(spark, min_df=5)
+    assert out[1] == _BP_FIXTURE[0][1]
+    assert out[3] == _FOOTER
+    assert out[6] == f"delta body\n{_FOOTER}"
+
+
 def test_render_sequences_materializes_the_artifact(spark, sf_dir, duck):
     """render_sequences: the per-sequence artifact (member count, token
     total, byte-exact content md5) hash-matches the recursive pack

@@ -229,89 +229,3 @@ def test_dup_spans_min_count_raises_threshold(spark):
                                min_count=3).collect()}
     assert out2[1] == 4 and out2[2] == 4
     assert out3 == {1: 0, 2: 0, 3: 0}
-
-
-def test_dup_spans_min_span_filters_short_spans(spark):
-    """min_span (NEW r15, the ExactSubstr span rule): docs 1/2 share a
-    5-word run (span length 5 at n=4) and docs 1/3 share a separate
-    9-word run (span length 9); min_span=6 removes only the long run,
-    so the short shared phrase SURVIVES in every copy."""
-    import hashlib
-
-    from obadiah_spark.pipelines.docquality import dup_spans
-
-    short = "alpha beta gamma delta epsilon"
-    long = "p q r s t u v w x"
-    rows = [
-        (1, f"{short} one two {long}"),
-        (2, f"{short} three four five six"),
-        (3, f"{long} seven eight"),
-    ]
-    out = {r.doc_id: r.asDict()
-           for r in dup_spans(_docs(spark, rows), n=4,
-                              min_span=6).collect()}
-    # doc 1: only the 9-token long run (positions 7..15) is removed
-    assert out[1]["dup_words"] == 9
-    assert out[1]["clean_md5"] == hashlib.md5(
-        f"{short} one two".encode()).hexdigest()
-    # doc 2: its only dup span is the 5-token short run -> survives
-    assert out[2]["dup_words"] == 0
-    assert out[2]["clean_md5"] == hashlib.md5(
-        f"{short} three four five six".encode()).hexdigest()
-    # doc 3: the long run removed here too (all copies cut)
-    assert out[3]["dup_words"] == 9
-    assert out[3]["clean_md5"] == hashlib.md5(
-        b"seven eight").hexdigest()
-
-
-def test_dup_spans_adjacent_intervals_merge(spark):
-    """Two overlapping duplicated runs whose coverage is contiguous
-    merge into ONE maximal span: docs share 'a1..a5' and 'a5..a9'
-    separately is impossible to distinguish from sharing 'a1..a9' —
-    the interval union covers 9 tokens, passing min_span=9 even though
-    each gram-level run alone is shorter."""
-    from obadiah_spark.pipelines.docquality import dup_spans
-
-    run = "a1 a2 a3 a4 a5 a6 a7 a8 a9"
-    rows = [(1, f"{run} tail1 one"), (2, f"{run} tail2 two"),
-            (3, "z1 z2 z3 z4 z5")]
-    out = {r.doc_id: r.dup_words
-           for r in dup_spans(_docs(spark, rows), n=4,
-                              min_span=9).collect()}
-    assert out[1] == 9 and out[2] == 9 and out[3] == 0
-
-
-def test_dup_spans_min_span_one_equals_base(spark, sf_dir):
-    """Every covered position sits in a merged span of length >= n, so
-    min_span <= n degenerates to the historical remove-everything mode
-    exactly — pinning that the islands path is a pure refinement."""
-    import os
-
-    from obadiah_spark.pipelines.docquality import DUP_SPAN_N, dup_spans
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    base = sorted(tuple(r) for r in dup_spans(docs).collect())
-    spanned = sorted(tuple(r) for r in
-                     dup_spans(docs, min_span=DUP_SPAN_N).collect())
-    assert base == spanned
-
-
-def test_dup_spans_min_span_oracle_differential(spark, sf_dir):
-    """Value-level DuckDB differential for the staged exact_substr
-    gate's exact (n, min_count, min_span) geometry."""
-    import os
-
-    import duckdb
-
-    from obadiah_spark.pipelines.docquality import (dup_spans,
-                                                    dup_spans_oracle_sql)
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    got = sorted(tuple(r) for r in
-                 dup_spans(docs, min_span=16).collect())
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet("
-                f"'{os.path.join(sf_dir, 'documents.parquet')}')")
-    exp = sorted(tuple(r) for r in
-                 con.execute(dup_spans_oracle_sql(min_span=16)).fetchall())
-    assert got == exp

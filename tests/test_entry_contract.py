@@ -42,23 +42,6 @@ def test_no_orphan_oracles():
     assert not orphans, f"oracles without a query: {orphans}"
 
 
-def test_pending_queue_is_oracle_backed_and_callable():
-    """The staged next-round registration queue (pending_queries) must
-    stay registration-ready: every staged key callable and oracle-backed
-    (value verification is `tools/verify_local.py <sf> --pending`)."""
-    pq = entry.pending_queries()
-    po = entry.pending_oracle_sql()
-    assert pq, "pending queue unexpectedly empty"
-    missing = [k for k in pq if k not in po]
-    assert not missing, f"pending keys without oracle: {missing}"
-    orphans = [k for k in po if k not in pq]
-    assert not orphans, f"pending oracles without a query: {orphans}"
-    for k, fn in pq.items():
-        assert callable(fn), f"pending {k} is not callable"
-        assert isinstance(po[k], str) and po[k].strip(), (
-            f"pending {k} oracle is not a SQL string")
-
-
 def _recent_correctness(n: int = 2) -> tuple[list[str], dict]:
     """Union of the *n* newest CORRECTNESS_r*.json files at the repo root.
 
@@ -112,41 +95,3 @@ def test_rotation_age_bound():
         f"entries past the driver's 50-slot cap without a green row in "
         f"{[os.path.basename(p) for p in paths]} (their driver "
         f"verification would age past two rounds): {stale}")
-
-
-def test_staged_registration_plan_fits_the_window():
-    """Structural invariants of the staged registration plan (VERDICT
-    r14 #1 was a hand-arithmetic slip here).  The plan was sized to fit
-    r16's 50-slot window exactly; r16 ran as the final OPTIMIZATION
-    round (registration is feature work, out of scope), so after the
-    r16 rotation the expiring set no longer contains the union-retired
-    members and the exact-50 fit is no longer assertable — a future
-    build round would stage part of the plan.  What must stay true for
-    the queue to remain registration-ready: every key resolves to a
-    registered or staged runner, no planned key duplicates, every
-    CURRENT tail key (expiring into the next round) is either in the
-    plan or retired by a staged union, and the retired members are real
-    registered keys."""
-    plan = entry.staged_registration_plan()
-    assert len(plan) >= 50, f"planned window is {len(plan)}: the tail no longer fills a 50-slot window"
-    assert len(set(plan)) == len(plan), "duplicate keys in the plan"
-    known = set(entry.queries()) | set(entry.pending_queries())
-    missing = [k for k in plan if k not in known]
-    assert not missing, f"planned keys with no runner: {missing}"
-    # staged union/standalone keys must be in the pending queue with
-    # oracles (the pending contract test covers callability)
-    pend = set(entry.pending_queries())
-    staged = [k for k in plan if k in pend]
-    assert set(staged) == pend, (
-        "every pending key must appear in the plan (else it never "
-        "gets a driver row)")
-    # age bound: every current tail key is accounted for
-    tail = list(entry.queries())[50:]
-    retired = {m for ms in entry._R16_UNION_RETIRES.values() for m in ms}
-    unaccounted = [k for k in tail if k not in plan and k not in retired]
-    assert not unaccounted, (
-        f"tail keys neither planned nor retired: {unaccounted}")
-    # retired members must really be current keys (a typo here would
-    # silently shrink the window)
-    ghost = [m for m in retired if m not in set(entry.queries())]
-    assert not ghost, f"retired members not in queries(): {ghost}"

@@ -4,9 +4,9 @@ contain zero disallowed cartesian/BNLJ nodes.
 The audit itself (`python tools/plan_audit.py`) regenerates PLANS.json; this
 test makes two silent-failure modes impossible: registering a new query
 without auditing its plan, and an audited plan carrying an unexplained
-cross product. (A changed plan for an existing query still requires
-re-running the tool — that is the per-round discipline, enforced by the
-coverage check whenever the query set moves.)"""
+cross product. PLANS.json is not tracked, so the `plans` fixture re-runs the
+audit on the tests' session whenever the file is missing or older than
+`__spark_entry__.py` (a fresh checkout, or an edited registry)."""
 
 from __future__ import annotations
 
@@ -14,28 +14,37 @@ import json
 import os
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry
-from tools.plan_audit import ALLOWED_BNLJ, ALLOWED_CROSS
+from tools.plan_audit import ALLOWED_BNLJ, ALLOWED_CROSS, audit_queries
 
 
-def _plans() -> dict:
-    with open(os.path.join(REPO, "PLANS.json")) as fh:
+@pytest.fixture(scope="session")
+def plans(spark, sf_dir) -> dict:
+    path = os.path.join(REPO, "PLANS.json")
+    if (not os.path.exists(path) or os.path.getmtime(path)
+            < os.path.getmtime(os.path.join(REPO, "__spark_entry__.py"))):
+        out, _bad = audit_queries(spark, sf_dir, entry.queries())
+        with open(path, "w") as fh:
+            json.dump(out, fh, indent=1, sort_keys=True)
+    with open(path) as fh:
         return json.load(fh)
 
 
-def test_plans_cover_every_query():
-    missing = [k for k in entry.queries() if k not in _plans()]
+def test_plans_cover_every_query(plans):
+    missing = [k for k in entry.queries() if k not in plans]
     assert not missing, (
         f"queries with no plan-audit entry (run tools/plan_audit.py): "
         f"{missing}")
 
 
-def test_no_unexplained_cross_products():
+def test_no_unexplained_cross_products(plans):
     bad = []
-    for name, rec in _plans().items():
+    for name, rec in plans.items():
         cross = rec.get("cartesian", 0) + rec.get("bnlj", 0)
         if cross and name not in ALLOWED_CROSS and name not in ALLOWED_BNLJ:
             bad.append((name, cross))
@@ -43,9 +52,7 @@ def test_no_unexplained_cross_products():
 
 
 def test_allowed_lists_only_name_registered_queries():
-    # staged pending gates count: plan_audit --pending audits them under
-    # the same allow-lists before they ever reach the driver window
-    qs = set(entry.queries()) | set(entry.pending_queries())
+    qs = entry.queries()
     stale = [k for k in (set(ALLOWED_CROSS) | set(ALLOWED_BNLJ))
              if k not in qs]
     assert not stale, f"allow-list names unknown queries: {stale}"

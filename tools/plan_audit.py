@@ -45,13 +45,11 @@ ALLOWED_CROSS = {"ann_bruteforce", "ngram_jaccard",
                  # per-subspace encode, and the 16-row coarse codebook as
                  # in ann_ivf; the candidate/ADC joins are equi-joins
                  "ann_ivfpq",
-                 # staged pending gates with the identical bounded IVF
-                 # patterns: coarse/sub-codebook broadcasts only; the
-                 # pair/candidate joins are (cell, bucket) equi-joins;
-                 # ann_ivfpq is the base+Lloyd-trained union since r15;
-                 # ann_ingest_stream queries the streamed index through
-                 # the same ann_ivfpq_query plan
-                 "semdedup", "ann_ivfpq_query", "ann_ingest_stream",
+                 # gates with the identical bounded IVF patterns:
+                 # coarse/sub-codebook broadcasts only; the pair/candidate
+                 # joins are (cell, bucket) equi-joins; ann_ivfpq is the
+                 # base+Lloyd-trained union since r15
+                 "semdedup", "ann_ivfpq_query",
                  # the union of the two recall bounds (ann_lsh_recall +
                  # embedding_dedup_lsh_recall, retired r15) inherits both
                  # members' documented bounded exact sides
@@ -68,11 +66,6 @@ ALLOWED_BNLJ = {
     "bigram_rarity":
         "the corpus bigram total is a ONE-ROW broadcast crossJoin "
         "(surprisal denominator) — bounded by construction",
-    "ppl_buckets":
-        "the bigram_rarity ONE-ROW total crossJoin, appearing twice "
-        "because the scored frame feeds both the census and the "
-        "join-back — bounded by construction; the census join-back "
-        "itself is an equi-key BroadcastHashJoin",
     "quality_classifier":
         "two ONE-ROW broadcast crossJoins: the class token totals and "
         "the class prior — bounded by construction",
@@ -86,11 +79,6 @@ ALLOWED_BNLJ = {
         "corpus max-weight shift the accept race normalizes against — "
         "all bounded by construction; the bucket-weight join itself is "
         "an equi-join on bkt",
-    "cluster_sample":
-        "the IVF coarse-quantization crossJoin against the broadcast "
-        "n_cells-row codebook (_rank_cells — the same O(n x n_cells) "
-        "scoring pass the allowed ANN gates run), bounded by the "
-        "codebook size",
 }
 
 
@@ -135,37 +123,11 @@ def audit(name: str, df) -> dict:
     }
 
 
-def main() -> int:
-    # foot-gun guard: `plan_audit.py some_key` (sf_dir omitted) must not
-    # audit every query against a data dir named "some_key" and overwrite
-    # PLANS.json with 79 error stubs
-    args = [a for a in sys.argv[1:] if a != "--pending"]
-    pending = "--pending" in sys.argv[1:]
-    if args and not os.path.isdir(args[0]):
-        sf_dir, keys = "/root/testdata/sf0.001", args
-    else:
-        sf_dir = args[0] if args else "/root/testdata/sf0.001"
-        keys = args[1:]
-
-    import __spark_entry__ as em
-    from obadiah_spark.session import get_spark
-
-    # --pending audits the staged next-round queue into a separate
-    # PENDING_PLANS.json (the pytest guard covers PLANS.json only).
-    # Streaming-replay runners (pack_stream) EXECUTE in the runner and
-    # return a memory-sink scan — their audit records that trivially.
-    qs = em.pending_queries() if pending else em.queries()
-    unknown = [k for k in keys if k not in qs]
-    if unknown:
-        print(f"unknown query key(s) {unknown} — a mistyped sf_dir lands "
-              f"here too (first arg must be an existing directory to be "
-              f"treated as one); known keys: {sorted(qs)[:8]}...",
-              file=sys.stderr)
-        return 2
-    spark = get_spark("plan_audit")
-    if keys:
-        qs = {k: qs[k] for k in keys}
-
+def audit_queries(spark, sf_dir: str, qs: dict) -> tuple[dict, list]:
+    """Plan every runner in ``qs`` on ``spark``: ({key: audit record},
+    [flagged keys]).  Streaming-replay runners (pack_stream) EXECUTE in
+    the runner and return a memory-sink scan — their audit records that
+    trivially."""
     out: dict[str, dict] = {}
     bad: list[str] = []
     for name, fn in qs.items():
@@ -184,9 +146,38 @@ def main() -> int:
             flag = "  << DISALLOWED CROSS JOIN"
         print(f"{name}: exchanges={res['exchanges']} windows={res['windows']}"
               f" scans={res['scans']} cross={cross}{flag}")
+    return out, bad
 
-    plans_path = os.path.join(
-        REPO, "PENDING_PLANS.json" if pending else "PLANS.json")
+
+def main() -> int:
+    # foot-gun guard: `plan_audit.py some_key` (sf_dir omitted) must not
+    # audit every query against a data dir named "some_key" and overwrite
+    # PLANS.json with 79 error stubs
+    args = sys.argv[1:]
+    if args and not os.path.isdir(args[0]):
+        sf_dir, keys = "/root/testdata/sf0.001", args
+    else:
+        sf_dir = args[0] if args else "/root/testdata/sf0.001"
+        keys = args[1:]
+
+    import __spark_entry__ as em
+    from obadiah_spark.session import get_spark
+
+    qs = em.queries()
+    unknown = [k for k in keys if k not in qs]
+    if unknown:
+        print(f"unknown query key(s) {unknown} — a mistyped sf_dir lands "
+              f"here too (first arg must be an existing directory to be "
+              f"treated as one); known keys: {sorted(qs)[:8]}...",
+              file=sys.stderr)
+        return 2
+    spark = get_spark("plan_audit")
+    if keys:
+        qs = {k: qs[k] for k in keys}
+
+    out, bad = audit_queries(spark, sf_dir, qs)
+
+    plans_path = os.path.join(REPO, "PLANS.json")
     if keys:
         # subset run: MERGE into the existing file — a partial audit must
         # never shrink coverage (the pytest guard checks every query has
@@ -199,7 +190,7 @@ def main() -> int:
         except (OSError, ValueError):
             merged = {}
         merged.update(out)
-        live = set(em.pending_queries() if pending else em.queries())
+        live = em.queries()
         out = {k: v for k, v in merged.items() if k in live}
     with open(plans_path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)

@@ -546,7 +546,7 @@ def probe_staged(spark, emb_path: str, docs_path: str, work: str,
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
     timed("ivfpq_query_k5", lambda: ann_ivfpq_query(spark, idx, q).count())
 
-    # DSIR (staged r15): two bucket censuses + a broadcast weight join
+    # DSIR (the dsir_sample gate): two bucket censuses + a broadcast weight join
     # + one doc-keyed agg + the pure-map accept race — expected ~linear
     from obadiah_spark.pipelines.dsir import dsir_sample
     from obadiah_spark.pipelines.sampling import hash_sample
@@ -556,44 +556,13 @@ def probe_staged(spark, emb_path: str, docs_path: str, work: str,
         d2, hash_sample(d2, 0.3, salt="dsir_target")
         .select("doc_id", "text")).count())
 
-    # boilerplate removal (staged r16): hashed line census + membership
-    # join + doc-keyed rebuild — the dup_spans shuffle shape
-    from obadiah_spark.pipelines.docquality import drop_boilerplate
-
-    # agg over the rewrite columns, NOT count(): the output's left
-    # join from docs is 1:1, so count() lets Catalyst prune the whole
-    # census subtree and times nothing
-    timed("drop_boilerplate", lambda: drop_boilerplate(
-        d2, line_words=12).agg(
-            F.max("clean_md5"), F.sum("dropped_lines")).collect() and 1)
-
-    # cluster-balanced subsampling (staged r16): broadcast codebook
-    # scoring + ONE cell-partitioned window; reuses the probe codebook
-    from obadiah_spark.pipelines.sampling import cluster_balanced_sample
-
-    timed("cluster_sample", lambda: cluster_balanced_sample(
-        emb, 20, codebook=cbd["cb"]).count())
-
-    # perplexity buckets (staged r16): lang-id + bigram surprisal +
+    # perplexity buckets (a corpus_prepare stage): lang-id + bigram surprisal +
     # census CDF + broadcast join-back; agg over COMPUTED columns (the
     # probe-timing lesson) so no subtree prunes away
     from obadiah_spark.pipelines.text import perplexity_buckets
 
     timed("ppl_buckets", lambda: perplexity_buckets(d2).agg(
         F.sum("ppl_milli"), F.sum(F.length("bucket"))).collect() and 1)
-
-    # ExactSubstr span mode (staged r16): dup_spans' census/join shape
-    # + one doc-keyed running-max window over duplicated STARTS only
-    from obadiah_spark.pipelines.docquality import dup_spans
-
-    timed("exact_substr", lambda: dup_spans(d2, min_span=16).agg(
-        F.max("clean_md5"), F.sum("dup_words")).collect() and 1)
-
-    # streaming IVF-PQ index ingest (staged r16): 3-batch vector replay
-    # encoding under frozen books into idempotent batch/cell partitions,
-    # then the pruned query over the streamed layout
-    timed("ann_ingest_stream",
-          lambda: _ann_ingest_replay(spark, emb, cbd["cb"], work, tag))
 
     # production defaults: the corpus-count auto-shard rule sizes the
     # fold groups, so per-task memory stays flat as the corpus grows
@@ -602,50 +571,6 @@ def probe_staged(spark, emb_path: str, docs_path: str, work: str,
     timed("pack_stream_replay",
           lambda: _pack_stream_replay(spark, docs, work, tag))
     return out
-
-
-def _ann_ingest_replay(spark, emb, cb, work: str, tag: str) -> int:
-    """Stream the embeddings through run_ann_index_ingest in 3
-    vec_id-range micro-batches (distributed chunk authoring, no
-    collect), then run the index query — the staged gate's shape at
-    probe scale."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from obadiah_spark.pipelines.similarity import (ann_ivfpq_query,
-                                                    pq_subcodebooks)
-    from obadiah_spark.streaming.ann_ingest import run_ann_index_ingest
-
-    src = os.path.join(work, f"ann_ingest_src_{tag}")
-    idx = os.path.join(work, f"ann_ingest_idx_{tag}")
-    ckpt = os.path.join(work, f"ann_ingest_ckpt_{tag}")
-    for d in (src, idx, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(src)
-    bounds = emb.select(
-        F.percentile_approx("vec_id", [1 / 3, 2 / 3], 10_000)).first()[0]
-    sel = emb.select("vec_id", "embedding")
-    chunks = [sel.filter(F.col("vec_id") <= bounds[0]),
-              sel.filter((F.col("vec_id") > bounds[0])
-                         & (F.col("vec_id") <= bounds[1])),
-              sel.filter(F.col("vec_id") > bounds[1])]
-    base = time.time()
-    for i, ch in enumerate(chunks):
-        d = os.path.join(src, f"{i:03d}")
-        ch.write.parquet(d)
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                os.utime(os.path.join(root, f),
-                         (base + 10 * i, base + 10 * i))
-    run_ann_index_ingest(
-        spark, os.path.join(src, "*"),
-        "vec_id long, embedding array<float>", ckpt, idx,
-        codebook=cb, subcodebook=pq_subcodebooks(emb),
-        max_files_per_trigger=64)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return ann_ivfpq_query(spark, idx, q).count()
 
 
 def _pack_stream_replay(spark, docs, work: str, tag: str) -> int:

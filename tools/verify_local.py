@@ -113,8 +113,7 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 
 
 def main():
-    args = [a for a in sys.argv[1:] if a != "--pending"]
-    pending = "--pending" in sys.argv[1:]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
@@ -128,14 +127,8 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    if pending:
-        # the staged next-round registration queue (not visible to the
-        # driver): pre-verify before moving keys into queries()
-        qs = entrymod.pending_queries()
-        oracles = entrymod.pending_oracle_sql()
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_weak = 0
     for key, fn in qs.items():
         if only and key not in only:
