@@ -1496,16 +1496,14 @@ def _packed_trade_id():
         "its 12/19-bit field")))
 
 
-def _q_match_sequential(spark, sf_dir):
-    """I10 closed loop: take the inferred trades (which know their buy/sell
-    ORDER ids), forget the event links, and recover them by scanning the
-    sequential event stream with F7 rule codes."""
+def _closed_loop_trades(l3):
+    """I10 closed-loop trades: the inferred trades with their event links
+    forgotten (packed trade id, week era, the matchers' column names)."""
     from pyspark.sql import functions as F
 
-    from obadiah_spark.operators.matching import inferred_trades, match_sequential
+    from obadiah_spark.operators.matching import inferred_trades
 
-    l3 = _l3(spark, sf_dir)
-    t = inferred_trades(l3).select(
+    return inferred_trades(l3).select(
         "pair_id",
         F.date_trunc("week", "microtimestamp").alias("era"),
         _packed_trade_id().alias("exchange_trade_id"),
@@ -1514,6 +1512,16 @@ def _q_match_sequential(spark, sf_dir):
         F.col("side").alias("trade_type"),
         "buy_order_id", "sell_order_id",
     )
+
+
+def _q_match_sequential(spark, sf_dir):
+    """I10 closed loop: take the inferred trades (which know their buy/sell
+    ORDER ids), forget the event links, and recover them by scanning the
+    sequential event stream with F7 rule codes."""
+    from obadiah_spark.operators.matching import match_sequential
+
+    l3 = _l3(spark, sf_dir)
+    t = _closed_loop_trades(l3)
     # inferred_trades is itself a multi-window pipeline; materialize it once
     # (it is tiny — one row per fill) instead of letting the matcher's
     # consumers re-derive it inside a compound plan
@@ -1544,18 +1552,9 @@ def _q_match_sweep(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from obadiah_spark.operators.lifecycle import bitstamp_match_sweep
-    from obadiah_spark.operators.matching import inferred_trades
 
     l3 = _l3(spark, sf_dir)
-    t = inferred_trades(l3).select(
-        "pair_id",
-        F.date_trunc("week", "microtimestamp").alias("era"),
-        _packed_trade_id().alias("exchange_trade_id"),
-        F.col("microtimestamp").alias("trade_microtimestamp"),
-        "amount", "price",
-        F.col("side").alias("trade_type"),
-        "buy_order_id", "sell_order_id",
-    )
+    t = _closed_loop_trades(l3)
     b = F.col("exchange_trade_id") % 5
     delta = F.lit(0.0)
     for k, d in enumerate(_SWEEP_DELTAS[1:], start=1):

@@ -53,6 +53,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 FOLD_KEYS = ("pair_id", "exchange_id", "era")
 EVENT_ORDER = ["microtimestamp", "order_id", "event_no"]
@@ -71,7 +72,7 @@ DEPTH_SCHEMA = (
 def ordered_fold(
     df: DataFrame,
     fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
+    schema: str | StructType,
     keys: tuple[str, ...] = FOLD_KEYS,
     order: list[str] | None = None,
 ) -> DataFrame:

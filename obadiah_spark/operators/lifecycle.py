@@ -62,14 +62,17 @@ same links, merged by key).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from obadiah_spark.operators.matching import (
+    match_candidates,
+    match_cells,
     match_fill_exact_oracle_sql,
     match_price_and_fill_exact,
-    match_sequential,
     match_sequential_body_sql,
     match_sequential_pairs_sql,
     match_sum_of_fills,
@@ -362,7 +365,6 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
                          tolerances: tuple[float, ...] = SWEEP_TOLERANCES,
                          max_offset: int = SWEEP_MAX_OFFSET,
                          claimed: DataFrame | None = None,
-                         cache_inputs: bool = True,
                          period_s: int | None = None) -> DataFrame:
     """The ``bitstamp.pga_match`` sequential-matching sweep (reference
     db/bitstamp_schema.sql:1780-1861): for each tolerance percentage (outer)
@@ -371,8 +373,7 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
     over the still-unmatched trades, excluding events claimed by earlier
     cells — the reference threads this state through live_trades UPDATEs
     (matched trades leave ``unmatched_trades``) and the live_orders trade_id
-    backfill (claimed events fail ``trade_id is null``); here both are
-    derived from the accumulated result frame.
+    backfill (claimed events fail ``trade_id is null``).
 
     Returns one row per matched trade: the I10 link columns plus
     (tolerance, sweep_offset) provenance — which grid cell matched it.
@@ -381,209 +382,56 @@ def bitstamp_match_sweep(l3: DataFrame, trades: DataFrame,
     AFTER the lead window (claimed events still occupy positions in the
     event stream), exactly the reference's filter placement.
 
+    One plan, no driver loop: the per-offset :func:`sequential_event_pairs`
+    frames, each tagged with its ``sweep_offset``, are unioned and joined
+    to the trades once (:func:`match_candidates`) and handed to
+    :func:`match_cells` — a prefilter to the rows feasible at the largest
+    tolerance, then one fold per ``pair_id`` that walks the cells in
+    reference order and carries the matched-trade and claimed-event sets,
+    both of which are per pair. The fold key is ``pair_id`` alone, because
+    nothing makes ``exchange_trade_id`` unique across one pair's eras.
+
     ``claimed`` seeds the exclusion set with events matched by PREVIOUS
     runs — the resume path: the reference re-runs the sweep every few
     minutes over [last matched event, era end]; a caller replays that by
     filtering ``l3``/``trades`` to the window (plain filters — the repo
-    convention) and passing the prior links' :func:`claimed_events`.
-    Re-running over already-matched ground is then a no-op
-    (tests/test_lifecycle.py idempotency test).
+    convention) and passing the prior links' :func:`claimed_events`. The
+    seed is fixed for the whole grid, so it is applied once, as two
+    anti-joins on the candidate frame. Re-running over already-matched
+    ground is then a no-op (tests/test_lifecycle.py idempotency test).
 
     The reference's full pga_match also UPSERTS ``inferred_trades`` (I9)
     first; that phase is the separately-gated :func:`inferred_trades` — a
     deployment composes I9 → promote → this sweep, the same composition the
     gate's closed loop performs. Orchestration (pgagent cadence, advisory
-    locks) is out of scope per SURVEY §2.6.
-
-    Scale: the expensive part — the per-offset lead-window over the full
-    event stream — runs ONCE per offset (``sequential_event_pairs``,
-    checkpointed), not once per grid cell: a 5×4 grid costs 4 windows plus
-    at most 20 cheap equi-joins against broadcast-size state frames.
-    Three further bit-identical prunes (r13) cut the dead-cell overhead:
-    a fused per-offset stats pass counts feasible rows at EACH grid
-    tolerance, so cells with zero feasible candidates are skipped without
-    running any jobs (exact: resolve filters on feasibility at the cell's
-    tolerance over a subset of the counted frame); the claimed-state
-    broadcasts drop their defensive ``distinct`` (anti-joins are invariant
-    under duplicate build rows); and the grid short-circuit bound is the
-    distinct matchable-trade count across the feasible frames rather than
-    the raw trade count, so it fires even when some trades are
-    unmatchable at every cell. Each cell's
-    result is checkpointed, so the threaded state (anti-join frames) stays
-    a union of tiny in-memory leaves and the logical plan depth is bounded
-    per cell, not cumulative across the grid. ``period_s`` passes through
+    locks) is out of scope per SURVEY §2.6. ``period_s`` passes through
     to :func:`sequential_event_pairs` — the period-parallel neighbor
     lookup for reducer-breakingly large eras (same opt-in and same
     split-equality guarantee as :func:`match_sequential`).
     """
     if not tolerances or max_offset < 1:
         raise ValueError("sweep grid is empty")
-    if cache_inputs:
-        trades = trades.localCheckpoint(eager=True)
-    # the per-offset lead-window frames — and the tolerance-INDEPENDENT
-    # candidate join of each against the full trade set — are independent
-    # of each other and of the grid state, so they materialize as
-    # concurrent jobs (the cells themselves are sequentially dependent by
-    # the reference's semantics: each cell's exclusion state is every
-    # earlier cell's claims). Hoisting the candidate join per offset is
-    # what makes the full 5x4 grid affordable: each cell then anti-joins
-    # and resolves over a frame of O(trades) candidate rows instead of
-    # rescanning the O(events) pair frame — measured 21.6 s -> ~8 s at
-    # sf0.1 for the 20-cell reference grid.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from obadiah_spark.operators.matching import (
-        match_candidates, match_feasible, match_resolve, match_rule)
-
-    offsets = range(1, max_offset + 1)
-    max_tol = max(tolerances)
-
-    def _feasible_at(tol_pct: float):
-        # mirror of match_feasible's rule pair at ONE grid tolerance —
-        # used only for provable-emptiness stats, never to produce rows
-        tol = F.lit(tol_pct) * F.col("t_price")
-        mr = match_rule(F.col("t_amount"), F.col("t_price"),
-                        F.col("amount"), F.col("fill"), F.col("is_del"), tol)
-        n_mr = match_rule(F.col("t_amount"), F.col("t_price"),
-                          F.col("n_amount"), F.col("n_fill"),
-                          F.col("n_is_del"), tol)
-        return mr.isNotNull() & n_mr.isNotNull()
-
-    def _cand_for(off: int):
-        p = sequential_event_pairs(l3, off, period_s)
-        c = match_feasible(
-            match_candidates(p, trades), max_tol).localCheckpoint(eager=True)
-        # fused stats pass over the checkpointed leaf (replaces the old
-        # isEmpty probe — same job count): per grid tolerance, how many
-        # candidate rows are feasible. The F7 rule's non-NULL set is
-        # monotone in tolerance and the claimed/matched anti-joins only
-        # SHRINK the frame, so a (tolerance, offset) cell whose count is
-        # zero here is PROVABLY empty — it can be skipped without running
-        # any of its jobs, bit-identically (an empty cell contributes
-        # nothing to the union). At the gate grid this skips the
-        # low-tolerance cells of the sparse offsets >= 2.
-        row = c.agg(*[
-            F.sum(_feasible_at(t).cast("int")).alias(f"f{i}")
-            for i, t in enumerate(tolerances)]).first()
-        return c, [row[f"f{i}"] or 0 for i in range(len(tolerances))]
-
-    with ThreadPoolExecutor(max_workers=min(4, max_offset)) as pool:
-        res = dict(zip(offsets, pool.map(_cand_for, offsets)))
-    cand0 = {off: c for off, (c, _) in res.items()}
-    feas = {off: f for off, (_, f) in res.items()}
-    # short-circuit (r11, tightened r13): a trade matches in at most one
-    # cell, so once every MATCHABLE trade is matched the remaining grid is
-    # all-empty — break out of it. The bound is the distinct count of
-    # trades appearing in ANY offset's feasible candidate frame (one tiny
-    # job over the checkpointed leaves) — strictly tighter than the old
-    # trades.count() bound, which never fired when some trades are
-    # unmatchable at every cell. Output is bit-identical: a cell past the
-    # bound could only match a NEW trade, and every matchable trade is
-    # feasible somewhere, hence already counted. A per-cell
-    # candidate-emptiness probe (WITH the anti-joins) was tried and
-    # REJECTED: on productive grids (the gate's shape) the extra action
-    # per cell costs more than the cells it ever skips; the monotone
-    # zero-count skip above is the free subset of it.
-    idx_max = tolerances.index(max_tol)
-    n_matchable = None
-    if cache_inputs:
-        ids = [cand0[off].select("pair_id", "exchange_trade_id")
-               for off in offsets if feas[off][idx_max] > 0]
-        if ids:
-            u = ids[0]
-            for d in ids[1:]:
-                u = u.unionByName(d)
-            n_matchable = u.distinct().count()
-        else:
-            n_matchable = 0
-    n_matched = 0
-    out: DataFrame | None = None
-    for ti, tol in enumerate(tolerances):
-        if n_matchable is not None and n_matched >= n_matchable:
-            break  # every matchable trade matched — the rest is empty
-        # (a row-start probe — one anti-join job per tolerance row to skip
-        # cells whose feasible trades are all matched — was tried in r13
-        # and REVERTED: the gate's dead mid-grid cells die in RESOLVE
-        # (claimed events, one-event-one-trade dedup), not in the trade
-        # anti-join, so the probe count stays positive, skips nothing,
-        # and its jobs made the warm grid 26.0 -> 30.9 s at sf0.1.)
-        for off in range(1, max_offset + 1):
-            if feas[off][ti] == 0:
-                continue  # provably empty at this tolerance (see above)
-            cl = claimed
-            cand = cand0[off]
-            if out is not None:
-                new_cl = claimed_events(out)
-                cl = new_cl if cl is None else cl.unionByName(new_cl)
-                cand = cand.join(
-                    out.select("pair_id", "exchange_trade_id"),
-                    ["pair_id", "exchange_trade_id"], "left_anti")
-            if cl is not None:
-                # claimed exclusion on the candidate frame — identical to
-                # filtering the pair frame (the trade equi-join commutes
-                # with a filter on the event-side columns) and still AFTER
-                # the lead window, the reference's filter placement.
-                # No distinct: left_anti is invariant under duplicate build
-                # rows, claims are unique by construction (one event per
-                # trade, resolve dedups within a cell), and the distinct
-                # was a shuffle inside BOTH broadcast builds every cell
-                cand = cand.join(
-                    F.broadcast(cl),
-                    ["pair_id", "era", "microtimestamp", "order_id",
-                     "event_no"], "left_anti")
-                cl2 = cl.select(
-                    "pair_id", "era",
-                    F.col("microtimestamp").alias("n_microtimestamp"),
-                    F.col("order_id").alias("n_order_id"),
-                    F.col("event_no").alias("n_event_no"))
-                cand = cand.join(
-                    F.broadcast(cl2),
-                    ["pair_id", "era", "n_microtimestamp", "n_order_id",
-                     "n_event_no"], "left_anti")
-            # ACCUMULATED state, one flat leaf (r16): the loop used to
-            # checkpoint each cell's result separately and union the
-            # leaves, so by cell k the threaded state was a union of k
-            # leaves and the claims chain 2k projections — and every
-            # cell's CONSTRUCTION (py4j + analysis of the growing plan)
-            # cost ~0.4-0.9 s of pure driver time, the gate's real floor
-            # (profiled: 19.9 s pass = 10.4 s of jobs + ~9 s of driver
-            # gaps; per-cell build dominated both checkpoint job and
-            # count). Re-checkpointing the ACCUMULATED union instead
-            # keeps every cell's plan flat (one leaf + three anti-joins)
-            # for the cost of re-writing <= a few thousand tiny rows per
-            # cell. Same rows, same exclusion state — claimed_events
-            # distributes over union, and the count short-circuit reads
-            # the cumulative total directly. (Eager, as before: the next
-            # cell's broadcast builds would otherwise each re-derive the
-            # state — measured slower lazy in r13, 26.0 -> 62.8 s.)
-            # checkpoint_proposed=False (r16 re-A/B under the flat-state
-            # regime): the per-cell proposed checkpoint job now costs
-            # more than evaluating the narrow filter over the
-            # checkpointed candidate leaf twice — alternating-arm A/B at
-            # sf0.1: lazy 12.9-14.7 s vs eager 14.3-16.8 s per pass (the
-            # r9/r13 A/Bs that favored eager predate the hoisted
-            # candidate checkpoint and the flat accumulated state).
-            m = (
-                match_resolve(cand, tol, checkpoint_proposed=False)
-                .withColumn("tolerance", F.lit(float(tol)))
-                .withColumn("sweep_offset", F.lit(off))
-            )
-            # coalesce(1): the accumulated state is bounded by the
-            # matched trades and is BROADCAST into every later cell's
-            # anti-joins anyway (it must fit in memory by design), so one
-            # partition keeps each cell's checkpoint/count/broadcast jobs
-            # single-task instead of concatenating every prior cell's
-            # shuffle partitions (A/B: 14.3-15.9 s vs 16.2-17.4 s warm)
-            out = (m if out is None else out.unionByName(m)
-                   ).coalesce(1).localCheckpoint(eager=True)
-            n_matched = out.count()  # free: materialized by the checkpoint
-            if n_matchable is not None and n_matched >= n_matchable:
-                break
-    if out is None:  # every offset infeasible — a correctly-typed empty
-        out = (match_resolve(cand0[1], float(tolerances[0]))
-               .withColumn("tolerance", F.lit(float(tolerances[0])))
-               .withColumn("sweep_offset", F.lit(1)))
-    return out
+    pairs = reduce(DataFrame.unionByName, [
+        sequential_event_pairs(l3, off, period_s).withColumn(
+            "sweep_offset", F.lit(off))
+        for off in range(1, max_offset + 1)])
+    cand = match_candidates(pairs, trades)
+    if claimed is not None:
+        cand = cand.join(
+            F.broadcast(claimed),
+            ["pair_id", "era", "microtimestamp", "order_id", "event_no"],
+            "left_anti",
+        ).join(
+            F.broadcast(claimed.select(
+                "pair_id", "era",
+                F.col("microtimestamp").alias("n_microtimestamp"),
+                F.col("order_id").alias("n_order_id"),
+                F.col("event_no").alias("n_event_no"))),
+            ["pair_id", "era", "n_microtimestamp", "n_order_id",
+             "n_event_no"],
+            "left_anti",
+        )
+    return match_cells(cand, tolerances)
 
 
 def bitstamp_match_sweep_oracle_sql(
@@ -592,7 +440,7 @@ def bitstamp_match_sweep_oracle_sql(
         trades_cte: str = "sweep_trades") -> str:
     """One-statement DuckDB mirror of :func:`bitstamp_match_sweep`: the grid
     unrolls into chained CTEs — ``sweep_pairs_o{k}`` materialized once per
-    offset (the Spark checkpoint), then per cell i: ``m_i`` (one
+    offset, then per cell i: ``m_i`` (one
     :func:`match_sequential_body_sql` over the not-yet-matched trades
     ``u_i`` with claimed-event exclusion ``c_i``), running union ``acc_i``,
     and the next cell's state ``u_{i+1}``/``c_{i+1}`` derived from it."""

@@ -27,8 +27,13 @@ ids. No quadratic stage.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from obadiah_spark.fold import ordered_fold
 
 
 def match_rule(trade_amount: Column, trade_price: Column, event_amount: Column,
@@ -426,9 +431,9 @@ JOIN mem m ON m.pair_id = s.pair_id AND m.era = s.era
 def sequential_event_pairs(l3: DataFrame, offset: int = 1,
                            period_s: int | None = None) -> DataFrame:
     """The (event, lead(event, offset)) candidate-pair frame of
-    :func:`match_sequential`, tolerance-independent — build once per
-    offset and reuse across a tolerance sweep. See match_sequential for
-    the per-era window vs period-parallel (``period_s``) trade-offs."""
+    :func:`match_sequential`, tolerance-independent — a tolerance sweep
+    builds one per offset. See match_sequential for the per-era window vs
+    period-parallel (``period_s``) trade-offs."""
     is_del = F.col("chain_state") == "deleted"
     ev0 = l3.select(
         "pair_id", "era", "microtimestamp", "order_id", "event_no",
@@ -443,9 +448,8 @@ def sequential_event_pairs(l3: DataFrame, offset: int = 1,
     if period_s is None:
         w = W.partitionBy("pair_id", "era").orderBy(
             "microtimestamp", "order_id", "event_no")
-        ev = ev0
-        for src, dst in zip(lead_cols, n_names):
-            ev = ev.withColumn(dst, F.lead(src, offset).over(w))
+        ev = ev0.select("*", *[F.lead(src, offset).over(w).alias(dst)
+                               for src, dst in zip(lead_cols, n_names)])
     else:
         per = F.floor(
             F.unix_micros("microtimestamp") / F.lit(period_s * 1_000_000))
@@ -484,8 +488,7 @@ def sequential_event_pairs(l3: DataFrame, offset: int = 1,
 
 def match_sequential(l3: DataFrame, trades: DataFrame,
                      tolerance_pct: float = 0.0001, offset: int = 1,
-                     period_s: int | None = None,
-                     pairs: DataFrame | None = None) -> DataFrame:
+                     period_s: int | None = None) -> DataFrame:
     """I10 ``bitstamp.match_trades_to_sequential_events``: link a trade that
     knows its buy/sell ORDER ids (but not the events) to a pair of adjacent
     opposite-side events in the sequential event stream (reference
@@ -501,50 +504,41 @@ def match_sequential(l3: DataFrame, trades: DataFrame,
       event_no) (the reference orders by microtimestamp alone — ties broken
       arbitrarily; the tie-break makes both engines pick the same pair),
       keeping only opposite-side pairs where neither event is an order
-      creation;
+      creation (:func:`sequential_event_pairs`);
     - join to trades on {event order ids} = {trade's buy/sell order ids}
-      (both orientations — two equi-joins, unioned);
-    - both events must carry a non-NULL F7 match rule
-      (:func:`match_rule`, tolerance = tolerance_pct × trade price);
+      (both orientations, :func:`match_candidates`);
     - aggressor-direction check: the maker (opposite of the taker side) must
       have the OLDER price_microtimestamp; ties go to the bid maker — the
       same deterministic refinement as :func:`inferred_trades` (the
       reference uses strict inequalities and drops ties);
-    - an event may not participate in two trades (anti-join on the pair's
-      second event, reference ``matches`` CTE), then one event pair per
-      trade via row_number.
+    - then the one-cell case of :func:`match_cells`: both events carry a
+      non-NULL F7 rule (:func:`match_rule`, tolerance = tolerance_pct ×
+      trade price), an event may not participate in two trades, one event
+      pair per trade.
 
-    Scale: all joins are per (pair, era); no cross product. With
-    ``period_s`` set the sequential-neighbor lookup is period-parallel: row
-    numbers are assigned per (pair, era, period) partition, a prefix sum
-    over the TINY per-period count table turns them into exact global
-    positions, and ``lead(offset)`` becomes an equi-join on
-    ``gpos + offset`` — identical output to the unsplit window for any
-    offset (split-equality pytest), with parallelism = #periods instead of
-    one reducer per era. The join evaluates the event projection twice, so
-    it wins only when eras are reducer-breakingly large AND ``l3`` is a
-    cheap scan (the silver parquet), not a derived lineage — hence the
-    default keeps the single-pass per-era window, the same call-site
-    escape hatch as the other period-decomposed operators.
-
-    ``pairs`` injects a precomputed :func:`sequential_event_pairs` frame —
-    it depends on (l3, offset) only, so a tolerance sweep
-    (lifecycle.bitstamp_match_sweep) builds it once per offset instead
-    of once per (tolerance, offset) cell.
+    Scale: all joins are per (pair, era); no cross product; the resolve is
+    one per-pair fold over the few feasible candidates. With ``period_s``
+    set the sequential-neighbor lookup is period-parallel: per-(pair, era,
+    period) row numbers plus a prefix sum over the TINY per-period count
+    table give exact global positions, and ``lead(offset)`` becomes an
+    equi-join on ``gpos + offset`` — identical output for any offset
+    (split-equality pytest), parallelism = #periods instead of one reducer
+    per era. It evaluates the event projection twice, so it wins only for
+    reducer-breakingly large eras over a cheap ``l3`` scan; the default
+    keeps the single-pass per-era window.
     """
-    ev = pairs if pairs is not None else sequential_event_pairs(
-        l3, offset, period_s)
-    return match_resolve(match_candidates(ev, trades), tolerance_pct)
+    ev = sequential_event_pairs(l3, offset, period_s).withColumn(
+        "sweep_offset", F.lit(offset))
+    return match_cells(match_candidates(ev, trades), (tolerance_pct,)).drop(
+        "tolerance", "sweep_offset")
 
 
 def match_candidates(ev: DataFrame, trades: DataFrame) -> DataFrame:
     """The tolerance-INDEPENDENT half of :func:`match_sequential`: join
     the (event, lead-offset event) pair frame to the trades on order ids,
-    both orientations. A tolerance sweep hoists this per offset (it
-    depends on (l3, offset, trades) only) and each grid cell then works
-    on this TINY candidate frame — anti-joins against matched/claimed
-    state and the per-tolerance resolve — instead of rescanning the full
-    event-pair frame per cell."""
+    both orientations. A tolerance sweep joins the union of its offsets'
+    pair frames once; every grid cell then resolves over this TINY
+    candidate frame instead of the full event-pair frame."""
     # both orientations as ONE equi-join: explode each trade into its two
     # (first event, second event) order-id orientations and join once.
     # Semantically identical to the union of the buy-first and sell-first
@@ -584,7 +578,7 @@ def match_feasible(cand: DataFrame, max_tolerance_pct: float) -> DataFrame:
     tolerance (its only tolerance terms are ``< tolerance`` bounds), so a
     row whose rule is NULL at the sweep's LARGEST tolerance is NULL in
     every cell; the aggressor-direction check is tolerance-independent.
-    A sweep applies this once per offset — each grid cell then resolves
+    :func:`match_cells` applies this once — each grid cell then resolves
     over the few feasible rows (recomputing rule CODES at its own
     tolerance — codes do shift with tolerance, feasibility doesn't)
     instead of the full O(events-with-shared-order-ids) candidate join."""
@@ -604,83 +598,121 @@ def match_feasible(cand: DataFrame, max_tolerance_pct: float) -> DataFrame:
     )
 
 
-def match_resolve(cand: DataFrame, tolerance_pct: float,
-                  checkpoint_proposed: bool = True) -> DataFrame:
-    """The per-tolerance half of :func:`match_sequential`: F7 rule on both
-    events, aggressor-direction check, one-event-one-trade dedup, one
-    pair per trade.
+# the candidate columns the per-pair fold reads and passes through; the
+# F7 codes at each grid tolerance ride along as _mr{i} / _n_mr{i}
+_CELL_COLS = ("pair_id", "era", "exchange_trade_id", "trade_microtimestamp",
+              "t_amount", "t_price", "trade_type", "buy_order_id",
+              "sell_order_id", "ev_is_buy", "microtimestamp", "order_id",
+              "event_no", "n_microtimestamp", "n_order_id", "n_event_no",
+              "sweep_offset")
 
-    ``checkpoint_proposed=False`` skips the internal eager checkpoint of
-    the proposed frame — correct either way (the frame is merely
-    evaluated twice). Every call site, including the sweep, keeps the
-    default True: the post-hoist A/B at sf0.1 measured eager 17.7–20.3 s
-    vs lazy 19.3–21.1 s across the full grid (SCALE.md §7), so the
-    per-cell materialization job wins even on a checkpointed-leaf
-    candidate frame. The parameter records the knob and the measurement."""
-    tol = F.lit(tolerance_pct) * F.col("t_price")
-    mr = match_rule(F.col("t_amount"), F.col("t_price"), F.col("amount"),
-                    F.col("fill"), F.col("is_del"), tol)
-    n_mr = match_rule(F.col("t_amount"), F.col("t_price"), F.col("n_amount"),
-                      F.col("n_fill"), F.col("n_is_del"), tol)
-    buy_pts = F.when(F.col("ev_is_buy"), F.col("price_microtimestamp")).otherwise(F.col("n_pts"))
-    sell_pts = F.when(F.col("ev_is_buy"), F.col("n_pts")).otherwise(F.col("price_microtimestamp"))
-    proposed = (
-        cand.withColumn("mr", mr).withColumn("n_mr", n_mr)
-        .filter(F.col("mr").isNotNull() & F.col("n_mr").isNotNull())
-        .filter(
-            ((F.col("trade_type") == "b") & (sell_pts < buy_pts))
-            | ((F.col("trade_type") == "s") & (buy_pts <= sell_pts))
-        )
-    )
-    # a single event may not participate in two trades (reference `matches`).
-    # `proposed` is referenced twice below (as itself and as the exclusion
-    # set) — cut lineage so the candidate pipeline (lead windows + trade
-    # join) runs once, not once per reference; one candidate row per trade
-    # orientation, so this is a small frame (lazy was measured SLOWER both
-    # pre-hoist (r8) and post-hoist (r9 A/B, SCALE.md §7), so eager stays
-    # the default everywhere — see the docstring)
-    if checkpoint_proposed:
-        proposed = proposed.localCheckpoint()
-    seconds = proposed.select(
-        F.col("pair_id").alias("x_pair"), F.col("era").alias("x_era"),
-        F.col("n_order_id").alias("x_oid"), F.col("n_event_no").alias("x_eno"),
-    ).distinct()
-    dedup = proposed.join(
-        seconds,
-        (proposed.pair_id == seconds.x_pair) & (proposed.era == seconds.x_era)
-        & (proposed.order_id == seconds.x_oid)
-        & (proposed.event_no == seconds.x_eno),
-        "left_anti",
-    )
-    w_t = W.partitionBy("pair_id", "exchange_trade_id").orderBy(
-        "microtimestamp", "order_id", "event_no")
-    return (
-        dedup.withColumn("r", F.row_number().over(w_t)).filter("r = 1")
-        .select(
-            "pair_id", "era", "exchange_trade_id", "trade_microtimestamp",
-            F.col("t_amount").alias("amount"), F.col("t_price").alias("price"),
-            "trade_type", "buy_order_id", "sell_order_id",
-            F.when(F.col("ev_is_buy"), F.col("microtimestamp"))
-             .otherwise(F.col("n_microtimestamp")).alias("buy_microtimestamp"),
-            F.when(F.col("ev_is_buy"), F.col("event_no"))
-             .otherwise(F.col("n_event_no")).alias("buy_event_no"),
-            F.when(F.col("ev_is_buy"), F.col("mr"))
-             .otherwise(F.col("n_mr")).alias("buy_match_rule"),
-            F.when(~F.col("ev_is_buy"), F.col("microtimestamp"))
-             .otherwise(F.col("n_microtimestamp")).alias("sell_microtimestamp"),
-            F.when(~F.col("ev_is_buy"), F.col("event_no"))
-             .otherwise(F.col("n_event_no")).alias("sell_event_no"),
-            F.when(~F.col("ev_is_buy"), F.col("mr"))
-             .otherwise(F.col("n_mr")).alias("sell_match_rule"),
-        )
+
+def _resolve_cells(pdf: pd.DataFrame,
+                   tolerances: tuple[float, ...]) -> pd.DataFrame:
+    """The per-cell resolve rule, walked over one pair's candidates.
+
+    Cells run in reference order — tolerance outer (``tolerances`` order),
+    offset inner (ascending ``sweep_offset``). A cell's rows are its
+    offset's candidates, minus rows whose trade an earlier cell matched
+    or either of whose events an earlier cell claimed. Then:
+
+    - both F7 codes at the cell's tolerance must be non-NULL;
+    - a row is dropped when its first event (era, order_id, event_no) is
+      some proposed row's second event (reference ``matches`` CTE);
+    - per ``exchange_trade_id`` the first row by (microtimestamp,
+      order_id, event_no) is kept — ``pdf`` arrives in that order.
+
+    Kept rows add their trade to the matched set and both events
+    (era, microtimestamp, order_id, event_no) to the claimed set.
+    """
+    era = pdf["era"].to_numpy("datetime64[ns]").view("i8")
+    first, second = (
+        list(zip(era, pdf[f"{p}microtimestamp"].to_numpy(
+            "datetime64[ns]").view("i8"), pdf[f"{p}order_id"],
+            pdf[f"{p}event_no"]))
+        for p in ("", "n_"))
+    trade = pdf["exchange_trade_id"].tolist()
+    off = pdf["sweep_offset"].to_numpy()
+    mr, n_mr = (pdf[[f"_{p}mr{i}" for i in range(len(tolerances))]]
+                .to_numpy("float64") for p in ("", "n_"))
+    live = ~(np.isnan(mr) | np.isnan(n_mr))
+    matched, claimed = set(), set()
+    keep: list[int] = []
+    keep_ti: list[int] = []
+    for ti in range(len(tolerances)):
+        for o in np.unique(off):
+            rows = [i for i in np.flatnonzero(live[:, ti] & (off == o))
+                    if trade[i] not in matched and first[i] not in claimed
+                    and second[i] not in claimed]
+            seconds = {(e, oid, eno) for e, _, oid, eno in
+                       (second[i] for i in rows)}
+            for i in rows:
+                e, _, oid, eno = first[i]
+                # `matched` already holds this cell's earlier kept rows,
+                # so only a trade's first row survives
+                if (e, oid, eno) in seconds or trade[i] in matched:
+                    continue
+                matched.add(trade[i])
+                claimed.update((first[i], second[i]))
+                keep.append(i)
+                keep_ti.append(ti)
+    return pdf.iloc[keep][list(_CELL_COLS)].assign(
+        mr=mr[keep, keep_ti].astype("int32"),
+        n_mr=n_mr[keep, keep_ti].astype("int32"),
+        tolerance=np.asarray(tolerances, dtype="float64")[keep_ti])
+
+
+def match_cells(cand: DataFrame, tolerances: tuple[float, ...]) -> DataFrame:
+    """Resolve a tolerance × offset grid of I10 cells in ONE per-pair fold.
+
+    ``cand`` is a :func:`match_candidates` frame carrying a ``sweep_offset``
+    column. It is cut to the rows that can match in some cell
+    (:func:`match_feasible` at ``max(tolerances)``, which also applies the
+    aggressor-direction check), both events' F7 codes at every grid
+    tolerance are added as columns, then
+    :func:`~obadiah_spark.fold.ordered_fold` hands each pair's rows to
+    :func:`_resolve_cells`, which applies the per-cell rule in reference
+    order and threads the matched-trade and claimed-event sets between
+    cells. A one-tolerance, one-offset frame is :func:`match_sequential`.
+
+    The fold is keyed by ``pair_id`` alone: both sets are per pair, and
+    keying by (pair_id, era) would be exact only if an
+    ``exchange_trade_id`` never repeated across one pair's eras — nothing
+    enforces that.
+
+    Returns one row per matched trade: the I10 link columns plus the
+    matching cell (``tolerance``, ``sweep_offset``).
+    """
+    frame = match_feasible(cand, max(tolerances)).select(*_CELL_COLS, *[
+        match_rule(F.col("t_amount"), F.col("t_price"), F.col(f"{p}amount"),
+                   F.col(f"{p}fill"), F.col(f"{p}is_del"),
+                   F.lit(t) * F.col("t_price")).alias(f"_{p}mr{i}")
+        for i, t in enumerate(tolerances) for p in ("", "n_")])
+    schema = T.StructType(
+        [frame.schema[c] for c in _CELL_COLS]
+        + [T.StructField("mr", T.IntegerType()),
+           T.StructField("n_mr", T.IntegerType()),
+           T.StructField("tolerance", T.DoubleType())])
+    tols = tuple(float(t) for t in tolerances)
+    folded = ordered_fold(frame, lambda pdf: _resolve_cells(pdf, tols),
+                          schema, keys=("pair_id",))
+    buy = F.col("ev_is_buy")
+    return folded.select(
+        "pair_id", "era", "exchange_trade_id", "trade_microtimestamp",
+        F.col("t_amount").alias("amount"), F.col("t_price").alias("price"),
+        "trade_type", "buy_order_id", "sell_order_id",
+        *[F.when(side, F.col(a)).otherwise(F.col(f"n_{a}")).alias(f"{s}_{b}")
+          for s, side in (("buy", buy), ("sell", ~buy))
+          for a, b in (("microtimestamp", "microtimestamp"),
+                       ("event_no", "event_no"), ("mr", "match_rule"))],
+        "tolerance", "sweep_offset",
     )
 
 
 def match_sequential_pairs_sql(offset: int = 1, source: str = "level3") -> str:
     """The ``sequential_event_pairs`` frame as a standalone DuckDB query —
     the (event, lead(event, offset)) candidate pairs. Tolerance-independent;
-    a sweep oracle materializes one per offset (mirror of the Spark side's
-    per-offset ``localCheckpoint``)."""
+    a sweep oracle materializes one per offset."""
     return f"""
 WITH ev AS (
     SELECT pair_id, era, microtimestamp, order_id, event_no, side, amount,

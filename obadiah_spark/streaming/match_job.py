@@ -174,12 +174,13 @@ class BitstampMatchJob:
             trades = trades.join(
                 links.select("pair_id", "exchange_trade_id").distinct(),
                 ["pair_id", "exchange_trade_id"], "left_anti")
-            # ...but the claimed-EVENT exclusion is force-broadcast into
-            # two anti-joins per grid cell — seed it only with claims that
-            # can still collide with the cursor-filtered event pairs (a
-            # claim wholly before the cursor is never rescanned), so the
-            # broadcast stays bounded by the unmatched tail instead of
-            # growing O(links history) toward driver OOM (ADVICE r8)
+            # ...but the claimed-EVENT exclusion is one seed filter, a
+            # force-broadcast pair of anti-joins on the sweep's candidates
+            # — seed it only with claims that can still collide with the
+            # cursor-filtered event pairs (a claim wholly before the
+            # cursor is never rescanned), so the broadcast stays bounded
+            # by the unmatched tail instead of growing O(links history)
+            # toward driver OOM (ADVICE r8)
             if cursor is not None:
                 links = links.filter(F.greatest(
                     "buy_microtimestamp", "sell_microtimestamp") >= cursor)

@@ -101,11 +101,13 @@ def stream_shuffle_partitions(spark, n_rows: int,
     return max(1, min(cap, want))
 
 
-# sessions with an active scope (ADVICE r15: two overlapping scopes on
-# ONE session would interleave save/restore and could leave a tiny
-# partition count active session-wide for every later gate; concurrent
-# legs must isolate on spark.newSession() instead — _overlap_legs sites)
-_ACTIVE_SCOPES: set[int] = set()
+# JVM session UUIDs with an active scope (ADVICE r15: two overlapping
+# scopes on ONE session would interleave save/restore and could leave a
+# tiny partition count active session-wide for every later gate;
+# concurrent legs must isolate on spark.newSession() instead —
+# _overlap_legs sites). Keyed by the JVM session because two Python
+# wrappers of one JVM session share its conf.
+_ACTIVE_SCOPES: set[str] = set()
 
 
 @contextmanager
@@ -118,7 +120,7 @@ def scoped_shuffle_partitions(spark, n_partitions: int):
     may be active per session (asserted): a concurrent leg that needs
     its own scope must run on ``spark.newSession()`` (isolated conf,
     shared context)."""
-    sid = id(spark)
+    sid = spark._jsparkSession.sessionUUID()
     if sid in _ACTIVE_SCOPES:
         raise RuntimeError(
             "scoped_shuffle_partitions: a scope is already active on this "

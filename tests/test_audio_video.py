@@ -4,9 +4,6 @@ length-prefix frame skipping)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import numpy as np  # noqa: E402
 
@@ -316,9 +313,6 @@ def test_adpcm_header_strictness():
 def test_adpcm_gate_duckdb_differential(spark, sf_dir, duck):
     """The r13 gate oracle: the recursive-CTE state machine must equal
     the Python codec on every document."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.verify_local import canonicalize
 
     from obadiah_spark.pipelines.audio import (adpcm_roundtrip,

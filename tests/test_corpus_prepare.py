@@ -4,9 +4,6 @@ stage-consistency pins against the standalone operators."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest  # noqa: E402
 

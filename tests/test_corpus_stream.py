@@ -6,10 +6,8 @@ operators, so only the dedup stage can diverge — and doesn't)."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 
 import pandas as pd  # noqa: E402
 import pytest  # noqa: E402

@@ -6,10 +6,8 @@ deviation is pinned separately)."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 
 import pandas as pd  # noqa: E402
 

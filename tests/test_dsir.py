@@ -5,9 +5,6 @@ acceptance is weight-monotone in expectation)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from tools.verify_local import canonicalize  # noqa: E402
 

@@ -4,9 +4,6 @@ declarative Spark form, and the DuckDB oracle must agree exactly."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from obadiah_spark.fold import depth_change_fold, spread_fold  # noqa: E402
 from obadiah_spark.operators.depth import (  # noqa: E402

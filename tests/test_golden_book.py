@@ -6,10 +6,8 @@ price, and the emitted depth changes."""
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
 
 from obadiah_spark.fold import depth_change_fold, spread_fold  # noqa: E402
 

@@ -5,9 +5,6 @@ dims, restart markers, strictness, and dims-header agreement."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import numpy as np  # noqa: E402
 

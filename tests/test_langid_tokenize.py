@@ -7,9 +7,6 @@ and mixed content."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from obadiah_spark.pipelines.langid import (  # noqa: E402
     LANGS,

@@ -11,12 +11,10 @@ trades inside the 2-minute delay tail that must stay unmatched."""
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime, timedelta
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -464,6 +462,119 @@ def test_sweep_full_reference_grid(spark):
     want = {int(r.exchange_trade_id): (r.tolerance, int(r.sweep_offset))
             for r in oracle.itertuples()}
     assert got == want
+
+
+def _oracle_rows(l3, trades, out, sql, trades_view):
+    """(Spark rows, DuckDB rows) of ``out`` and ``sql`` over the same
+    fixture, as sorted tuples of ``out``'s columns."""
+    import duckdb
+
+    cols = sorted(out.columns)
+    con = duckdb.connect()
+    con.register("level3", l3.toPandas())
+    con.register(trades_view, trades.toPandas())
+    oracle = con.execute(sql).fetch_df()
+    got = sorted(map(tuple, out.select(*cols).toPandas().itertuples(index=False)))
+    want = sorted(map(tuple, oracle[cols].itertuples(index=False)))
+    return got, want
+
+
+def test_sweep_pairs_are_independent(spark):
+    """The fold's state is per pair: the exclusion fixture copied under a
+    second pair_id with the SAME order ids, trade ids and timestamps must
+    give each pair the single-pair result (a state shared across pairs
+    would see pair 2's trade ids as already matched), and the combined
+    fixture must agree with the DuckDB sweep oracle."""
+    from obadiah_spark.operators.lifecycle import (
+        bitstamp_match_sweep, bitstamp_match_sweep_oracle_sql)
+
+    l3, trades = _sweep_frames(spark)
+    single = bitstamp_match_sweep(l3, trades, **SWEEP_GRID).drop("pair_id")
+    want = sorted(map(tuple, single.collect()))
+    l3_2 = l3.unionByName(l3.withColumn("pair_id", F.lit(2)))
+    trades_2 = trades.unionByName(trades.withColumn("pair_id", F.lit(2)))
+    out = bitstamp_match_sweep(l3_2, trades_2, **SWEEP_GRID)
+    for pair in (1, 2):
+        got = out.filter(F.col("pair_id") == pair).drop("pair_id")
+        assert sorted(map(tuple, got.collect())) == want
+    got, oracle = _oracle_rows(l3_2, trades_2, out,
+                               bitstamp_match_sweep_oracle_sql(**SWEEP_GRID),
+                               "sweep_trades")
+    assert len(got) == 2 * len(want) and got == oracle
+
+
+# one-event-one-trade within a cell: pairs (10, 20) and (20, 30) are both
+# proposed in the first cell, and event 20 is the SECOND event of the first
+# row and the FIRST event of the second, so trade 600's row is dropped
+# (reference ``matches`` CTE) and 600 never matches — its pair keeps the
+# claimed event 20 in every later cell.
+DEDUP_EVENTS = [
+    (10, 1.0, 2, "s", 0.0, 5.0, 0.5),
+    (20, 1.1, 2, "b", 0.0, 5.0, 0.8),
+    (30, 1.2, 2, "s", 0.0, 5.0, 0.6),
+]
+DEDUP_TRADES = [
+    (500, 1.3, 5.0, 100.0, "b", 20, 10),
+    (600, 1.4, 5.0, 100.0, "b", 20, 30),
+]
+
+
+def _dedup_frames(spark):
+    l3 = spark.createDataFrame(
+        [(1, ERA, _ts(t), oid, eno, side, a, f, _ts(pts), "active")
+         for oid, t, eno, side, a, f, pts in DEDUP_EVENTS],
+        "pair_id int, era timestamp, microtimestamp timestamp, "
+        "order_id bigint, event_no int, side string, amount double, "
+        "fill double, price_microtimestamp timestamp, chain_state string",
+    )
+    trades = spark.createDataFrame(
+        [(1, ERA, tid, _ts(t), a, p, ty, bo, so)
+         for tid, t, a, p, ty, bo, so in DEDUP_TRADES],
+        "pair_id int, era timestamp, exchange_trade_id bigint, "
+        "trade_microtimestamp timestamp, amount double, price double, "
+        "trade_type string, buy_order_id bigint, sell_order_id bigint",
+    )
+    return l3, trades
+
+
+def test_cell_drops_rows_whose_first_event_is_another_rows_second(spark):
+    """The within-cell one-event-one-trade rule fires: trade 600's only
+    candidate starts at the event that trade 500's candidate ends at, so
+    only 500 matches — in match_sequential and in the sweep, each checked
+    against its DuckDB oracle."""
+    from obadiah_spark.operators.lifecycle import (
+        bitstamp_match_sweep, bitstamp_match_sweep_oracle_sql)
+    from obadiah_spark.operators.matching import (
+        match_sequential, match_sequential_oracle_sql)
+
+    l3, trades = _dedup_frames(spark)
+    seq = match_sequential(l3, trades)
+    assert [r.exchange_trade_id for r in seq.collect()] == [500]
+    got, want = _oracle_rows(l3, trades, seq, match_sequential_oracle_sql(),
+                             "seq_trades")
+    assert got == want
+    sweep = bitstamp_match_sweep(l3, trades, **SWEEP_GRID)
+    assert [(r.exchange_trade_id, r.tolerance, r.sweep_offset)
+            for r in sweep.collect()] == [(500, 0.0001, 1)]
+    got, want = _oracle_rows(l3, trades, sweep,
+                             bitstamp_match_sweep_oracle_sql(**SWEEP_GRID),
+                             "sweep_trades")
+    assert got == want
+
+
+def test_sweep_without_feasible_candidates_is_typed_empty(spark):
+    """Trades whose amounts no grid tolerance can reach have candidates
+    but no feasible one: the sweep returns zero rows with the schema of a
+    non-empty result."""
+    from obadiah_spark.operators.lifecycle import bitstamp_match_sweep
+
+    l3, trades = _sweep_frames(spark)
+    far = trades.withColumn("amount", F.col("amount") + 1000.0)
+    empty = bitstamp_match_sweep(l3, far, **SWEEP_GRID)
+    full = bitstamp_match_sweep(l3, trades, **SWEEP_GRID)
+    assert empty.count() == 0
+    assert full.count() > 0
+    assert empty.schema == full.schema
 
 
 def test_read_links_distinguishes_missing_from_broken(spark, tmp_path):

@@ -4,9 +4,6 @@ the trade's (price, fill, side, episode) signature is unambiguous."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 

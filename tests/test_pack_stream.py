@@ -5,10 +5,8 @@ micro-batch boundaries; the per-shard state is three scalars."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 
 import pandas as pd  # noqa: E402
 

@@ -4,9 +4,6 @@ LSH recall vs brute force, and the multimodal plumbing invariants."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

@@ -5,10 +5,8 @@ from __future__ import annotations
 
 import pytest
 
-import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
 
 from obadiah_spark.operators.quality import chain_audit, crossed_books  # noqa: E402
 

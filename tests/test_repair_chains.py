@@ -2,10 +2,8 @@
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
 
 import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

@@ -5,9 +5,6 @@ offline-codebook production path."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import numpy as np  # noqa: E402
 

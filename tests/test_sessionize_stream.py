@@ -4,10 +4,8 @@ vs relational.sessionize_events), including the per-row cents rounding."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 
 import pandas as pd  # noqa: E402
 

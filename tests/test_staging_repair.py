@@ -8,9 +8,6 @@ driver's gate exercises them at sf0.01 regardless.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

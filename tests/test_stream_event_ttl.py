@@ -10,10 +10,8 @@ output or in the recall gap)."""
 from __future__ import annotations
 
 import os
-import sys
 import time
 
-sys.path.insert(0, "/root/repo")
 
 import pandas as pd  # noqa: E402
 import pytest  # noqa: E402

@@ -82,3 +82,26 @@ def test_scoped_conf_restores(spark):
         with scoped_shuffle_partitions(spark, 5):
             raise RuntimeError("boom")
     assert spark.conf.get(key) == before
+
+
+def test_scope_guard_sees_through_python_wrappers(spark):
+    """Two Python wrappers of ONE JVM session share its conf, so a scope on
+    the second wrapper nested in a scope on the first must be refused and
+    leave the conf untouched; a ``newSession()`` (own conf) still gets its
+    own scope."""
+    from pyspark.sql import SparkSession
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    twin = SparkSession(spark.sparkContext, spark._jsparkSession)
+    assert twin is not spark
+    with scoped_shuffle_partitions(spark, 3):
+        with pytest.raises(RuntimeError, match="already active"):
+            with scoped_shuffle_partitions(twin, 5):
+                pass
+        assert spark.conf.get(key) == "3"
+        other = spark.newSession()
+        with scoped_shuffle_partitions(other, 5):
+            assert other.conf.get(key) == "5"
+            assert spark.conf.get(key) == "3"
+    assert spark.conf.get(key) == before

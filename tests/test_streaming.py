@@ -5,10 +5,8 @@ reference's trigger-based chaining is order-insensitive the same way)."""
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
 
 import numpy as np  # noqa: E402
 

@@ -6,9 +6,6 @@ fold deduped on price change."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import numpy as np  # noqa: E402
 

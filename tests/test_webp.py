@@ -6,9 +6,7 @@ prefix codes), strictness, and the distance-map table pin."""
 from __future__ import annotations
 
 import random
-import sys
 
-sys.path.insert(0, "/root/repo")
 
 import pytest  # noqa: E402
 
